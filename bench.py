@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datums_warehouse_spark import all_queries
-from datums_warehouse_spark.session import get_spark
+from datums_warehouse_spark.session import cpus, get_spark
 
 # Headline set: the flagship + one representative per operator family.
 # The first 12 are the r01-r06 comparison set; "legacy_12_total" in the
@@ -169,13 +169,13 @@ def main() -> None:
     escalated: dict[str, int] = {}
 
     def _timed_pass(name: str) -> None:
-        # Each timed pass pays its own shingle-cache build (VERDICT r12):
-        # the dedup family's scoped cache is a real within-query win (the
-        # frame is re-scanned up to 6× in ONE query), but letting it
-        # survive from the warm pass or a prior timed pass would exclude
-        # the md5 shingle build from every published number — a memoised
-        # intermediate keyed on the testdata path. Released OUTSIDE the
-        # timer: the unpersist is harness bookkeeping, not query work.
+        # Each timed pass builds its own dedup index (llm/dedup.py): the
+        # index is a real within-session win (l2 pairs, clusters, l26 and
+        # l29 all read one pair pipeline), but letting it survive from the
+        # warm pass or a prior timed pass would turn the timed pass into a
+        # scan of cached pairs and exclude the shingle → signature → verify
+        # build from every published number. Released OUTSIDE the timer:
+        # the unpersist is harness bookkeeping, not query work.
         release_caches()
         t0 = time.perf_counter()
         qs[name].fn(spark, sf_dir).count()
@@ -211,7 +211,7 @@ def main() -> None:
     noisy_heavy = [n for n in noisy_out if timings[n] >= NOISY_MEDIAN_FLOOR_SEC]
     total = sum(timings.values())
 
-    release_caches()  # drop the last dedup shingle cache before reporting
+    release_caches()  # drop the last dedup index before reporting
     print(
         json.dumps(
             {
@@ -263,9 +263,7 @@ def main() -> None:
                 # flat — echoing the master the session REALLY ran with
                 # lets a reader distinguish "env var ignored" from
                 # "insensitive at this scale factor"
-                "cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-                ),
+                "cpus": cpus(),
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "master": spark.sparkContext.master,
                 "calibration_sec": calibration,

@@ -39,33 +39,6 @@ from datums_warehouse_spark.sources.tables import load, spread
 N_HASHES = 8
 N_BANDS = 4  # 4 bands × 2 rows
 
-# Scoped shingle cache: the shingle DataFrame is reused 2-3× within one
-# dedup query (signatures + Jaccard verify), so caching it is a real win —
-# but a query function can't know when its caller is done materializing, so
-# a plain .cache() leaks blocks across queries in a long-lived session.
-# Policy: at most ONE live shingle cache, keyed by (session, sf_dir) so
-# repeated calls (and minhash/ngram in the same run) REUSE it rather than
-# rebuild; taking a cache for a new key unpersists the old one. Long-lived
-# callers can release_caches() when done with dedup entirely.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _scoped_cache(df: DataFrame, key: tuple) -> DataFrame:
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    release_caches()
-    df = df.cache()
-    _SHINGLE_CACHE[key] = df
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist any shingle cache still held from a prior dedup query."""
-    for df in _SHINGLE_CACHE.values():
-        df.unpersist()
-    _SHINGLE_CACHE.clear()
-
 # --- shared shingle pipeline -------------------------------------------------
 #
 # Shingle identity IS its 48-bit hash: every consumer (minhash, Jaccard
@@ -134,23 +107,23 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, with_size: bool = False) -> DataFrame:
-    """One row per doc with N_HASHES minhash columns mh0..mh7.
-
-    ``with_size`` adds the doc's shingle count as ``n`` — the Jaccard
-    verify stage's size table riding the SAME aggregation (round 13): a
-    separate ``sh.groupBy(doc_id).count()`` is one more full pass over
-    the shingle stream plus its own exchange, for counts this group-by
-    already sees."""
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_AS[i]) * F.col("h") + F.lit(MINHASH_BS[i])) % F.lit(MINHASH_P)
-        ).alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("n"))
-    return sh.groupBy("doc_id").agg(*aggs)
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """One row per doc: N_HASHES minhash columns mh0..mh7 plus the doc's
+    shingle count ``n`` — the Jaccard verify stage's size table riding the
+    SAME aggregation, so one pass over the shingle stream yields both the
+    band keys and the sizes. Consumers read ``n`` from the index's cached
+    signature frame: column pruning splits an uncached aggregate into a
+    minhash pass and a count pass, but cannot split a cached relation."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(
+                (F.lit(MINHASH_AS[i]) * F.col("h") + F.lit(MINHASH_BS[i]))
+                % F.lit(MINHASH_P)
+            ).alias(f"mh{i}")
+            for i in range(N_HASHES)
+        ],
+        F.count(F.lit(1)).alias("n"),
+    )
 
 
 SQL_SIGNATURES = f"""
@@ -206,7 +179,7 @@ def jaccard_verify(
     unchanged, only the candidate stream shrinks.
 
     ``sizes`` (doc_id, n) lets a caller that already aggregated per-doc
-    shingle counts (minhash_signatures with_size=True) pass them in,
+    shingle counts (the index's signature frame) pass them in,
     skipping this function's own full pass over ``sh``; identical by
     construction — both count the rows of the same distinct-shingle
     frame.
@@ -350,6 +323,122 @@ def lsh_candidates(sigs: DataFrame) -> DataFrame:
     )
 
 
+# --- the dedup index ---------------------------------------------------------
+#
+# Seven queries (l2 pairs, l2 clusters, l18, l26, l29, l37, l40) and the two
+# exact-Jaccard shingle consumers share one chain: shingles → signatures →
+# LSH candidates → verified pairs → components. A _DedupIndex holds each
+# stage of it for one (session, sf_dir): a stage is derived on first use and
+# pinned with .cache(), so building a lazy query still runs no job — the
+# first query that materializes a stage pays for it, every later query
+# scans it. Components are the exception: label propagation is iterative,
+# so they are computed when first asked for (their consumers are tagged
+# eager). At most ONE index is live; asking for another (session, sf_dir)
+# releases the old one first.
+#
+# release_caches() is the single release point and unpersists every stage.
+# Whoever re-runs queries against the same files and wants each run to pay
+# for its own build must call it before each run, outside any timer
+# (bench.py, scripts/stress.py, scripts/corescale.py and the perfbench
+# workloads do, between passes); a long-lived session calls it when it is
+# done with dedup. The index never notices a rewritten input file — release
+# it after rewriting one.
+
+
+class _DedupIndex:
+    """Lazily built, cached stages of the MinHash/LSH dedup chain over one
+    (session, sf_dir) documents table."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self.spark, self.sf_dir = spark, sf_dir
+        self._stages: dict[str, DataFrame] = {}
+
+    def _stage(self, name: str, build) -> DataFrame:
+        df = self._stages.get(name)
+        if df is None:
+            df = self._stages[name] = build().cache()
+        return df
+
+    @property
+    def shingles(self) -> DataFrame:
+        """(doc_id, h): distinct hashed 3-word shingles per document."""
+        return self._stage(
+            "shingles", lambda: shingles(load(self.spark, self.sf_dir, "documents"))
+        )
+
+    @property
+    def sigs(self) -> DataFrame:
+        """(doc_id, mh0..mh7, n): minhash signature and shingle count."""
+        return self._stage("sigs", lambda: minhash_signatures(self.shingles))
+
+    @property
+    def candidates(self) -> DataFrame:
+        """(doc_a, doc_b): banded LSH candidate pairs, doc_a < doc_b."""
+        return self._stage("candidates", lambda: lsh_candidates(self.sigs))
+
+    @property
+    def pairs(self) -> DataFrame:
+        """(doc_a, doc_b, jaccard): candidates verified at JACCARD_THRESHOLD."""
+        return self._stage(
+            "pairs",
+            lambda: jaccard_verify(
+                self.candidates,
+                self.shingles,
+                JACCARD_THRESHOLD,
+                sizes=self.sigs.select("doc_id", "n"),
+            ),
+        )
+
+    @property
+    def components(self) -> DataFrame:
+        """(doc_id, cluster_id, keep): connected components of the pair
+        graph, labeled by their smallest doc_id. Eager: runs label
+        propagation on first access."""
+        return self._stage("components", self._components)
+
+    def _components(self) -> DataFrame:
+        pairs = self.pairs
+        edges = (
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+            .unionByName(
+                pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+            )
+            .localCheckpoint(eager=True)  # per-round plans start from a leaf
+        )
+        labels = min_label_propagation(self.spark, edges)
+        return labels.select(
+            F.col("u").alias("doc_id"),
+            F.col("label").alias("cluster_id"),
+            (F.col("u") == F.col("label")).alias("keep"),
+        )
+
+    def release(self) -> None:
+        for df in self._stages.values():
+            df.unpersist()
+        self._stages.clear()
+
+
+_INDEX: _DedupIndex | None = None
+
+
+def dedup_index(spark: SparkSession, sf_dir: str) -> _DedupIndex:
+    """The live dedup index for (spark, sf_dir), created on first use."""
+    global _INDEX
+    if _INDEX is None or _INDEX.spark is not spark or _INDEX.sf_dir != sf_dir:
+        release_caches()
+        _INDEX = _DedupIndex(spark, sf_dir)
+    return _INDEX
+
+
+def release_caches() -> None:
+    """Unpersist every stage of the live dedup index and drop it; the next
+    dedup query rebuilds what it needs."""
+    global _INDEX
+    if _INDEX is not None:
+        _INDEX.release()
+        _INDEX = None
+
+
 @query(
     "l2_minhash_lsh_pairs",
     oracle=f"""
@@ -367,15 +456,7 @@ def l2_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHashLSH) so the arithmetic is deterministic integer math that the
     oracle reproduces exactly (SURVEY.md §4.3.3).
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
-    sigs = minhash_signatures(sh, with_size=True)
-
-    cand = lsh_candidates(sigs)
-
-    return jaccard_verify(
-        cand, sh, JACCARD_THRESHOLD, sizes=sigs.select("doc_id", "n")
-    )
+    return dedup_index(spark, sf_dir).pairs
 
 
 # --- L2: near-dup clusters (connected components) ----------------------------
@@ -423,18 +504,7 @@ def l2_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates the growing plan per round. The oracle replays it as a
     recursive reachability CTE.
     """
-    pairs = l2_minhash_lsh_pairs(spark, sf_dir)
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .localCheckpoint(eager=True)  # pair pipeline runs once, not per round
-    )
-    labels = min_label_propagation(spark, edges)
-    return labels.select(
-        F.col("u").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("u") == F.col("label")).alias("keep"),
-    )
+    return dedup_index(spark, sf_dir).components
 
 
 def min_label_propagation(
@@ -654,7 +724,7 @@ def l2_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits oversized shingle partitions here.
     """
     docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
+    sh = dedup_index(spark, sf_dir).shingles
     # lang rides along on the index rows so the block predicate is part of
     # the self-join condition (broadcast: the doc→lang map is tiny next to
     # the shingle index; at scale it's a co-partitioned join on doc_id)
@@ -731,9 +801,9 @@ def l2_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full inverted index's Σ df(s)² explodes. Exact: same result set as the
     unpruned join; the Jaccard verify stage is shared with LSH dedup.
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
     from pyspark.sql import Window
+
+    sh = dedup_index(spark, sf_dir).shingles
 
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     w_rank = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -818,8 +888,7 @@ def l18_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix filter, and exact for any eval doc small relative to the stop
     threshold × overlap bound.
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
+    sh = dedup_index(spark, sf_dir).shingles
     is_eval = F.col("doc_id") % 10 == 0
     ev = sh.filter(is_eval)
     tr = sh.filter(~is_eval)
@@ -900,7 +969,7 @@ def l26_cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     splits = docs.select("doc_id", split_col().alias("split"))
-    pairs = l2_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = dedup_index(spark, sf_dir).pairs.select("doc_a", "doc_b")
     sa = splits.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = splits.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
     return (
@@ -973,7 +1042,7 @@ def l29_dedup_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with ``d.join(drop, "doc_id", "left_anti").write`` — same
     plan minus the rollup.
     """
-    clusters = l2_dedup_clusters(spark, sf_dir)
+    clusters = dedup_index(spark, sf_dir).components
     dropped = clusters.filter(~F.col("keep")).select("doc_id", F.lit(True).alias("dr"))
     d = load(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " ")).cast("long")
@@ -1235,26 +1304,26 @@ def l37_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     0, so those pairs calibrate at exact-Jaccard 0 instead of silently
     vanishing (an inner join would bias the calibration upward).
 
-    Scale shape: reuses the l2 pipeline's shingle cache, signature
-    aggregate, and banded candidate join (never all-pairs); adds one
-    signature equi-join per side and the same candidates-only intersection
-    join l2's verify pays. Per-pair doubles are bit-identical across
-    engines (one division); the per-bucket mean goes through the decimal
-    sum, so the 9-row calibration table hash-grades.
+    Scale shape: reads the dedup index's shingles, signature frame
+    (minhashes and sizes from one aggregate) and banded candidates (never
+    all-pairs); adds one signature equi-join per side, which carries both
+    sizes, and the same candidates-only intersection join l2's verify
+    pays. Per-pair doubles are bit-identical across engines (one
+    division); the per-bucket mean goes through the decimal sum, so the
+    9-row calibration table hash-grades.
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
-    sigs = minhash_signatures(sh)
-
-    cand = lsh_candidates(sigs)
+    index = dedup_index(spark, sf_dir)
+    sh, sigs, cand = index.shingles, index.sigs, index.candidates
 
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_HASHES)],
+        F.col("n").alias("na"),
     )
     sb = sigs.select(
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_HASHES)],
+        F.col("n").alias("nb"),
     )
     matches = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("long") for i in range(N_HASHES)
@@ -1262,12 +1331,9 @@ def l37_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", matches.alias("matches"))
+        .select("doc_a", "doc_b", "na", "nb", matches.alias("matches"))
     )
 
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     x, y = sh.alias("x"), sh.alias("y")
     inter = (
         cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
@@ -1278,9 +1344,7 @@ def l37_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ni = F.coalesce(F.col("ni"), F.lit(0))
     jac = ni.cast("double") / (F.col("na") + F.col("nb") - ni)
     return (
-        est.join(F.broadcast(na), "doc_a")
-        .join(F.broadcast(nb), "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
+        est.join(inter, ["doc_a", "doc_b"], "left")
         .select("matches", jac.alias("j"))
         .groupBy("matches")
         .agg(
@@ -1332,11 +1396,11 @@ def l40_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new document a near-dup of anything we already have?").
 
     The fixture splits documents deterministically (doc_id % 3 == 0 is
-    the "new batch", the rest is the standing index). Both sides share
-    one shingle→minhash pass; the LSH band join is NEW×INDEX instead of
-    the l2 self-join, so candidate count scales with |new|·bucket-hit
-    rate, NOT |corpus|²; exact-Jaccard confirm touches candidates only
-    (same verify stage as l2, size-ratio pruned).
+    the "new batch", the rest is the standing index). Both sides read the
+    dedup index's one signature frame; the LSH band join is NEW×INDEX
+    instead of the l2 self-join, so candidate count scales with
+    |new|·bucket-hit rate, NOT |corpus|²; exact-Jaccard confirm touches
+    candidates only (same verify stage as l2, size-ratio pruned).
 
     Scale shape at 100 TB: the index side's band keys are a materialized
     table in production (write once, reuse every ingest), so an
@@ -1345,9 +1409,8 @@ def l40_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; the equi-join on (band, sig) shards across executors and AQE
     handles hot buckets. This plan grades the probe+confirm end-to-end.
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
-    sigs = minhash_signatures(sh, with_size=True)
+    index = dedup_index(spark, sf_dir)
+    sigs = index.sigs
     bands = lsh_bands(sigs)
     new_b = bands.filter(F.col("doc_id") % 3 == 0).alias("n")
     idx_b = bands.filter(F.col("doc_id") % 3 != 0).alias("i")
@@ -1360,7 +1423,7 @@ def l40_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return jaccard_verify(
-        cand, sh, JACCARD_THRESHOLD, sizes=sigs.select("doc_id", "n")
+        cand, index.shingles, JACCARD_THRESHOLD, sizes=sigs.select("doc_id", "n")
     ).select(
         F.col("doc_a").alias("doc_new"), F.col("doc_b").alias("dup_of"), "jaccard"
     )

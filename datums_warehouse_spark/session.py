@@ -19,21 +19,31 @@ def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
+def cpus() -> int:
+    """Cores for the local master: ``$SPARK_GRAFT_CPUS``, or the machine's
+    core count when that is unset or not a positive integer."""
+    try:
+        n = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        n = 0
+    return n if n > 0 else os.cpu_count() or 8
+
+
 def get_spark(app_name: str = "datums-warehouse-spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     - AQE on: runtime coalescing + skew-join handling — the same settings we
       would ship at cluster scale.
-    - ``spark.sql.shuffle.partitions`` starts at 2×cores locally; AQE
+    - ``spark.sql.shuffle.partitions`` starts at max(8, cores) locally; AQE
       coalesces down. On a real cluster this would be sized to data volume.
     - Session timezone pinned to UTC so timestamp semantics match the DuckDB
       oracle (naive timestamps throughout the testdata).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(8, int(cpus))))
+    n = cpus()
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(8, n)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
+        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]"))
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

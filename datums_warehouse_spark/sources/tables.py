@@ -8,6 +8,8 @@ and the vectorized reader for free.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -76,7 +78,13 @@ def starved(df: DataFrame) -> bool:
     must not get hard broadcast hints on unbounded intermediates, which
     bypass autoBroadcastJoinThreshold AND AQE demotion and die on the
     8 GB broadcast cap instead of degrading to a shuffle (ADVICE r12 on
-    j3). Plan-time only — ``getNumPartitions`` runs no job."""
+    j3). Plan-time only — ``getNumPartitions`` runs no job.
+
+    ``SPARK_GRAFT_NO_SPREAD`` (the A/B kill switch) makes every scan read
+    as not starved, so both of the gate's consumers — the repartition and
+    the join-strategy choice — take their production path together."""
+    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
+        return False
     sc = df.sparkSession.sparkContext
     return df.rdd.getNumPartitions() < sc.defaultParallelism
 
@@ -111,15 +119,10 @@ def spread(df: DataFrame, *keys: str, width: int | None = None) -> DataFrame:
     width 4-8, 1.04 s at width 1 (starved), 1.31 s at width 64
     (task-overhead-bound).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):  # A/B kill switch
-        return df
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+    if not starved(df):
         return df
     if width is None:
-        width = 2 * sc.defaultParallelism
+        width = 2 * df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(width, *keys) if keys else df.repartition(width)
 
 

@@ -78,6 +78,7 @@ import json, sys, time
 sys.path.insert(0, {root!r})
 from pyspark.sql import SparkSession
 from datums_warehouse_spark import all_queries
+from datums_warehouse_spark.llm.dedup import release_caches
 
 cores = {cores}
 spark = (
@@ -100,6 +101,7 @@ for name in {queries!r}:
     fn(spark, {sf_dir!r}).count()  # warm: JIT, footers, plan compilation
     ts = []
     for _ in range(3):
+        release_caches()  # each timed pass builds its own dedup index
         t0 = time.perf_counter()
         fn(spark, {sf_dir!r}).count()
         ts.append(time.perf_counter() - t0)

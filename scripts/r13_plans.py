@@ -2,7 +2,7 @@
 
     python scripts/r13_plans.py before|after [name ...]
 
-Writes plans/r12/<query>_<tag>.txt for every named query (default: the
+Writes plans/r13/<query>_<tag>.txt for every named query (default: the
 bench HEADLINE set) at sf0.1 — the judge checks plan claims in
 OPTIMIZATION_r13.md against these files.
 """

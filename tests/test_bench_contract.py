@@ -82,3 +82,19 @@ def test_frozen_comparison_sets_match_headline_prefix():
             "l2_dedup_clusters", "l33_dup_passages",
         }
     )
+
+
+def test_malformed_cpus_falls_back_to_the_core_count(monkeypatch):
+    """bench.py echoes the core count in its report, after every timed
+    pass has run: a malformed $SPARK_GRAFT_CPUS must fall back to the
+    machine's cores there (and in the session's master) instead of
+    raising and discarding the finished run."""
+    import bench
+    from datums_warehouse_spark.session import cpus
+
+    assert bench.cpus is cpus
+    for bad in ("four", "", "4.0", "0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert cpus() == (os.cpu_count() or 8), bad
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert cpus() == 3
