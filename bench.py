@@ -19,9 +19,8 @@ from datums_warehouse_spark import all_queries
 from datums_warehouse_spark.session import cpus, get_spark
 
 # Headline set: the flagship + one representative per operator family.
-# The first 12 are the r01-r06 comparison set; "legacy_12_total" in the
-# output is their subtotal so round-over-round deltas stay like-for-like
-# after the three round-7 additions widened the set to 15.
+# The first 12 are the r01-r06 comparison set; later rounds appended the
+# rest, so past BENCH_r*.json subtotals are prefixes of this list.
 HEADLINE = [
     "a8_candles_1h",          # flagship OHLCV aggregation
     "x1_resample_1h_to_1d",   # candle resample
@@ -67,38 +66,6 @@ HEADLINE = [
     "l52_semdedup_adaptive",
 ]
 
-# Frozen cross-round comparison sets (ADVICE r08: membership, not position —
-# a future HEADLINE reorder or mid-list insertion must not silently change
-# which queries a named subtotal covers). LEGACY_12 is the r01–r06 set,
-# PREV_18 the BENCH_r07 set, PREV_20 the BENCH_r08 set, PREV_21 the
-# BENCH_r09 set, PREV_22 the BENCH_r10 set (the full r10 headline
-# membership, frozen per the same discipline in round 11).
-LEGACY_12 = frozenset(HEADLINE[:12])
-PREV_18 = frozenset(HEADLINE[:18])
-PREV_20 = frozenset(HEADLINE[:20])
-PREV_21 = frozenset(HEADLINE[:21])
-PREV_22 = frozenset(HEADLINE[:22])
-assert (
-    len(LEGACY_12) == 12
-    and len(PREV_18) == 18
-    and len(PREV_20) == 20
-    and len(PREV_21) == 21
-    and len(PREV_22) == 22
-)
-
-# calibration_sec as measured the round each comparison set was frozen —
-# the fixed-work CPU yardstick. normalized_prev_total divides machine
-# speed out of the prev_21 subtotal: (prev_21 subtotal) ×
-# (R09_CALIBRATION / this round's calibration). PREV_22 is published RAW
-# only: its freeze round's calibration (BENCH_r10: 0.301) came from a
-# contention-contaminated run — three idle same-code re-runs in round 11
-# measured prev_20 at 15.6–21.2 s (r10 published 22.1) with calibrations
-# 0.41–0.76, so 0.301 is not a usable anchor (GRADED.md r11). Round 12
-# should anchor PREV_22's normalization to BENCH_r11's calibration_sec /
-# calibration_min_sec pair instead.
-R08_CALIBRATION = 0.395  # BENCH_r08 (PREV_20's anchor)
-R09_CALIBRATION = 0.386  # BENCH_r09 (PREV_21's anchor)
-
 # A query whose (max−min)/median over its passes exceeds this within one
 # bench run has an untrustworthy median (VERDICT r10: l2_dedup_clusters
 # published 6.24 s ± 3.83 — pure sandbox contention); escalate its repeats
@@ -120,16 +87,6 @@ def main() -> None:
     except ValueError:  # dir name without an sf<N> suffix
         sf = 0.0
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    # Queries whose r05 spread was ~25-70% of their median (cache/JIT
-    # sensitive iterative or sessionization shapes) get extra passes so the
-    # published median is stable round over round (VERDICT r05 §perf). A
-    # sub-3 repeats setting is a smoke run — don't inflate it.
-    noisy = {"l2_minhash_lsh_pairs", "t3_session_window", "l2_dedup_clusters"}
-    noisy_repeats = (
-        int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS_NOISY", "5"))
-        if repeats >= 3
-        else repeats
-    )
     spark = get_spark("bench")
 
     from datums_warehouse_spark.llm.dedup import release_caches
@@ -182,18 +139,18 @@ def main() -> None:
         runs[name].append(time.perf_counter() - t0)
 
     for name in names:
-        for _ in range(noisy_repeats if name in noisy else repeats):
+        for _ in range(repeats):
             _timed_pass(name)
-        # noise guard (VERDICT r10 task 7): an unstable median gets more
-        # passes before publication — contention is transient, so extra
-        # samples usually pull the median back to the steady state
+        # noise guard: an unstable median gets more passes before
+        # publication — contention is transient, so extra samples usually
+        # pull the median back to the steady state. A sub-3 repeats
+        # setting is a smoke run and is never escalated.
         if repeats >= 3 and _spread_ratio(runs[name]) > SPREAD_RATIO_LIMIT:
             before = len(runs[name])
             while len(runs[name]) < ESCALATED_REPEATS:
                 _timed_pass(name)
-            # ADVICE r11: only report a query as escalated when extra
-            # passes actually ran — a pre-declared noisy query already at
-            # ESCALATED_REPEATS would otherwise be mislabeled
+            # report a query as escalated only when extra passes ran
+            # (repeats may already be at ESCALATED_REPEATS)
             if len(runs[name]) > before:
                 escalated[name] = len(runs[name])
 
@@ -219,42 +176,6 @@ def main() -> None:
                 "value": round(total, 3),
                 "unit": "sec",
                 "queries": timings,
-                "legacy_12_total": round(
-                    sum(t for n, t in timings.items() if n in LEGACY_12), 3
-                ),
-                # the r07 comparison set (BENCH_r07's 18 queries)
-                "prev_18_total": round(
-                    sum(t for n, t in timings.items() if n in PREV_18), 3
-                ),
-                # the r08 comparison set (BENCH_r08's 20 queries), raw
-                "prev_20_total": round(
-                    sum(t for n, t in timings.items() if n in PREV_20), 3
-                ),
-                # the r09 comparison set (BENCH_r09's 21 queries), raw and
-                # calibration-normalized: the normalized number is what a
-                # judge should read for round-over-round regressions —
-                # machine-speed swings (r03→r04, r07→r08: uniform ~1.4×)
-                # divide out, code regressions don't. Normalization anchors
-                # to the calibration of the round the set was frozen (r09).
-                "prev_21_total": round(
-                    sum(t for n, t in timings.items() if n in PREV_21), 3
-                ),
-                "normalized_prev_total": round(
-                    sum(t for n, t in timings.items() if n in PREV_21)
-                    * (R09_CALIBRATION / calibration),
-                    3,
-                ),
-                # the r10 comparison set, raw + contention-robust per-query
-                # min (see the PREV_22 anchor comment above)
-                "prev_22_total": round(
-                    sum(t for n, t in timings.items() if n in PREV_22), 3
-                ),
-                "prev_22_min_total": round(
-                    sum(t for n, t in timings_min.items() if n in PREV_22), 3
-                ),
-                "prev_21_min_total": round(
-                    sum(t for n, t in timings_min.items() if n in PREV_21), 3
-                ),
                 "value_min": round(sum(timings_min.values()), 3),
                 "sf": sf,
                 # effective execution context (VERDICT r12 task 2a): at
@@ -270,7 +191,6 @@ def main() -> None:
                 "calibration_end_sec": round(statistics.median(calib_end), 3),
                 "calibration_min_sec": round(min(calib_start + calib_end), 3),
                 "repeats": repeats,
-                "repeats_noisy": {n: noisy_repeats for n in noisy if n in runs},
                 "repeats_escalated": escalated,
                 "spread": {
                     n: round(max(ts) - min(ts), 3) for n, ts in runs.items()

@@ -1119,12 +1119,17 @@ def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: positional W-gram hashing is a per-row projection (the
     gram string never leaves its row — only 8-byte hashes shuffle); the
-    inverted index is one hash aggregate keyed by gram (bounded by corpus
-    token count; hot boilerplate grams are single index rows, so the
-    probe join fans out 1:1 per position, never quadratically); the
-    island merge runs under Window.partitionBy(doc_id) — every window
-    scan local to its document's shuffle partition. Linear in corpus
-    volume end to end.
+    per-gram document count is ``size(collect_set(doc_id)) OVER
+    (PARTITION BY h)``, one shuffle with no probe join; the island merge
+    runs under Window.partitionBy(doc_id) — every window scan local to its
+    document's shuffle partition.
+
+    Memory bound: every position of one gram lands in one task, and the
+    window's collect_set buffer grows with the number of distinct
+    documents sharing that gram. A hot boilerplate gram (a licence line or
+    a nav footer repeated across the corpus) therefore holds O(documents
+    sharing it) in a single task and cannot be split by AQE; the rest of
+    the pipeline is linear in corpus volume.
     """
     from pyspark.sql import Window
 

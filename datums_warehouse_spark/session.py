@@ -40,11 +40,10 @@ def get_spark(app_name: str = "datums-warehouse-spark") -> SparkSession:
       oracle (naive timestamps throughout the testdata).
     """
     n = cpus()
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(8, n)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]"))
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", str(max(8, n)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -8,8 +8,6 @@ and the vectorized reader for free.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -78,13 +76,7 @@ def starved(df: DataFrame) -> bool:
     must not get hard broadcast hints on unbounded intermediates, which
     bypass autoBroadcastJoinThreshold AND AQE demotion and die on the
     8 GB broadcast cap instead of degrading to a shuffle (ADVICE r12 on
-    j3). Plan-time only — ``getNumPartitions`` runs no job.
-
-    ``SPARK_GRAFT_NO_SPREAD`` (the A/B kill switch) makes every scan read
-    as not starved, so both of the gate's consumers — the repartition and
-    the join-strategy choice — take their production path together."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return False
+    j3). Plan-time only — ``getNumPartitions`` runs no job."""
     sc = df.sparkSession.sparkContext
     return df.rdd.getNumPartitions() < sc.defaultParallelism
 

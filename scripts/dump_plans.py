@@ -1,17 +1,25 @@
-"""Dump physical plans for the headline queries → PLANS.md.
+"""Dump physical plans for the headline queries.
 
 Evidence artifact for plan-quality review: pushed filters, pruned schemas,
-join strategies, exchange counts. Regenerate after changing any operator:
+join strategies, exchange counts. Regenerate PLANS.md after changing any
+operator:
 
     python scripts/dump_plans.py
+
+Or write one ``.explain('formatted')`` file per query, ``DIR/<name>_<TAG>.txt``,
+for a before/after comparison (default names: the bench HEADLINE set):
+
+    python scripts/dump_plans.py --out plans/mine --tag before [name ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from datums_warehouse_spark import all_queries
@@ -56,10 +64,31 @@ EXTRA = [
 ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", help="write <name>_<tag>.txt files here, not PLANS.md")
+    ap.add_argument("--tag", help="file-name suffix, e.g. before/after")
+    ap.add_argument("names", nargs="*", help="queries to dump (needs --out)")
+    args = ap.parse_args(argv)
+    if (args.out is None) != (args.tag is None) or (args.names and not args.out):
+        ap.error("--out and --tag go together, and names need them")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dump-plans")
     qs = all_queries()
+    if args.out is not None:
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.names or HEADLINE:
+            if name not in qs:
+                print(f"skip {name}: not registered")
+                continue
+            plan = formatted_plan(qs[name].fn(spark, sf_dir))
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+        return
+
     out = [
         "# PLANS — physical plans of headline queries",
         "",
@@ -74,7 +103,7 @@ def main() -> None:
             continue
         plan = formatted_plan(qs[name].fn(spark, sf_dir))
         out += [f"## {name}", "", "```", plan.strip(), "```", ""]
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} lines)")
 

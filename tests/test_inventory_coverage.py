@@ -102,10 +102,9 @@ def test_correctness_rounds_fill_the_window():
 
 def test_grading_rotation_is_closed():
     """Every registered query must be reachable by driver grading: already
-    graded in a past round's CORRECTNESS artifact, in the active
-    GRADE_WINDOW-slot front, or in the prepared next-round rotation —
-    otherwise a query can
-    never earn the binding correctness evidence (GRADED.md)."""
+    graded in a past round's CORRECTNESS artifact or in the active
+    GRADE_WINDOW-slot front — otherwise a query can never earn the binding
+    correctness evidence (GRADED.md)."""
     import glob
     import json
     import os

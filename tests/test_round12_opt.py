@@ -15,7 +15,7 @@ import re
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark import all_queries
-from datums_warehouse_spark.sources.tables import load, spread, starved
+from datums_warehouse_spark.sources.tables import load, spread
 from datums_warehouse_spark.testing.plans import formatted_plan
 
 
@@ -33,18 +33,6 @@ def test_spread_widens_a_starved_scan(spark, sf_dir):
         out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
     )
     assert "RepartitionByExpression" in out._jdf.queryExecution().logical().toString()
-
-
-def test_no_spread_switch_turns_off_both_scale_gates(spark, sf_dir, monkeypatch):
-    """The A/B kill switch must turn off the repartition AND the
-    join-strategy gate that reads the same starved-scan test, or an A/B
-    run with the switch set pairs the unspread scan with the grading
-    join plan."""
-    docs = load(spark, sf_dir, "documents")
-    assert starved(docs)
-    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-    assert not starved(docs)
-    assert spread(docs, "doc_id") is docs
 
 
 def test_spread_runs_no_job(spark, sf_dir):
