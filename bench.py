@@ -60,8 +60,9 @@ HEADLINE = [
     "l47_incremental_semdedup",
     # round-12 additions: C4 cross-corpus line dedup (the new heavy text
     # stage — token-window split + corpus hash count + reassembly) and
-    # the adaptive per-cell routed SemDeDup kernel (the family's new
-    # production default shape; its delta vs l41 is the routing overhead)
+    # the SemDeDup pair kernel with per-cell routing (the family's
+    # production shape; its delta vs l41 is the count() window plus the
+    # hot cells' block replication)
     "l50_c4_line_dedup",
     "l52_semdedup_adaptive",
 ]

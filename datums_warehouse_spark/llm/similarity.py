@@ -952,6 +952,15 @@ SQL_SEMDEDUP_PAIRS = f"""
     )
 """
 
+# the one graded pair set of l41, l48, l49 and l52: every routing of the
+# pair kernel must reproduce this self-join
+SQL_SEMDEDUP_PAIRS_ORACLE = f"""
+        WITH {SQL_SEMDEDUP_ASG},
+        {SQL_SEMDEDUP_PAIRS}
+        SELECT cid, vec_a, vec_b, round(cos_raw, 6) AS cosine
+        FROM sem_pairs
+    """
+
 
 def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-step: (vec_id, label, cid, demb, norm) — every vector assigned
@@ -976,21 +985,23 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _assign_to_seeds_fast(emb, _semdedup_seeds(emb))
 
 
-def _semdedup_seeds(emb: DataFrame) -> DataFrame:
-    """The adaptive seed table as ONE row: a cid-sorted array of
-    (cid, cemb, cc) structs, K = max(K_MIN, ⌊N/CELL_TARGET⌋) sized from a
-    lazy 1-row aggregate (j12's bloom-sizing pattern — no driver
-    collect). Shared by the fold E-step (_assign_to_seeds) and the
+def _semdedup_seeds(src: DataFrame, cutoff: Column | None = None) -> DataFrame:
+    """The seed table as ONE row: a cid-sorted array of (cid, cemb, cc)
+    structs for the ``src`` vectors whose vec_id is below ``cutoff``, a
+    1-row aggregate over ``src`` broadcast-joined lazily (j12's
+    bloom-sizing pattern — nothing is collected). The default cutoff is
+    SemDeDup's K = max(K_MIN, ⌊N/CELL_TARGET⌋); l47 passes its index-only
+    threshold. Shared by the fold E-step (_assign_to_seeds) and the
     vectorized one (_assign_to_seeds_fast), so both score the IDENTICAL
     seed set."""
-    k = emb.agg(
-        F.greatest(
+    if cutoff is None:
+        cutoff = F.greatest(
             F.lit(SEMDEDUP_K_MIN),
             F.floor(F.count(F.lit(1)) / SEMDEDUP_CELL_TARGET),
-        ).alias("k")
-    )
+        )
+    k = src.agg(cutoff.alias("k"))
     return (
-        emb.join(F.broadcast(k))
+        src.join(F.broadcast(k))
         .filter(F.col("vec_id") < F.col("k"))
         .select(
             F.struct(
@@ -1157,111 +1168,83 @@ def _assign_to_seeds_fast(emb: DataFrame, seeds: DataFrame) -> DataFrame:
     )
 
 
-def _semdedup_pairs(cells: DataFrame) -> DataFrame:
-    """Within-cell cosine pairs ≥ θ (raw cosine kept for downstream).
+# every SemDeDup pair kernel's output; l47 renames vec_a/vec_b JVM-side
+SEMDEDUP_PAIR_SCHEMA = "cid long, vec_a long, vec_b long, cos_raw double"
 
-    The quadratic per-cell pair work runs as a VECTORIZED numpy kernel in
-    ``applyInPandas`` — the pattern the brief sanctions for exactly this
-    (dense pairwise similarity): one Arrow exchange keyed by cell, then
-    per-cell C(|cell|,2) dot products as elementwise array math instead of
-    a self-join whose interpreted per-pair ``aggregate``/``zip_with`` fold
-    allocates a dim-sized array per pair (the r09 session-2 join cut
-    measured 3.97 s at the 8× stress scale but degraded super-linearly to
-    >580 s at 32× — allocation-bound, not FLOP-bound; this kernel runs the
-    same 32× stage in seconds). Parallelism scales with K, and K ∝ N —
-    the property a 1000-executor run needs; per-task memory is bounded by
-    CELL_TARGET² doubles for balanced cells. Skew caveat (ADVICE r09):
-    nearest-seed assignment can produce a hot cell far above CELL_TARGET —
-    ``applyInPandas`` delivers the whole group to one task regardless, so
-    the cell's Arrow batch (O(|cell|·dim)) is the irreducible footprint;
-    the kernel's own temporaries are therefore capped by computing each
-    row's stripe in SEMDEDUP_PAIR_CHUNK-row blocks, keeping peak memory
-    at |cell|·dim + O(chunk·dim) instead of 3×|cell|·dim. A cell so hot
-    that its input batch alone breaks an executor (or serializes the
-    stage) needs re-splitting upstream — IMPLEMENTED as
-    ``_semdedup_pairs_salted`` (l48): salt the cell into hash blocks,
-    dedup each block pair as its own task. This unsalted kernel stays the
-    default because K ∝ N keeps the EXPECTED cell at CELL_TARGET and the
-    split pays a window + S× replication overhead a balanced corpus
-    doesn't need (STRESS.md's hot-cell section measures the crossover).
 
-    Cross-engine determinism: the dot product is ``np.cumsum`` over the
-    elementwise product row — the IDENTICAL left-fold addition order as
-    Spark's ``aggregate(zip_with(...))`` tree and DuckDB's
-    ``list_dot_product`` loop (0.0 + p0 ≡ p0 in IEEE), so every pair's
-    cosine is bit-equal to the SQL oracle's; pairs are emitted with
-    vec_a < vec_b from the cell sorted by vec_id."""
-    theta = SEMDEDUP_THETA
-    chunk = SEMDEDUP_PAIR_CHUNK  # bound by value: executors lack the repo
+def _pair_kernel(theta: float, chunk: int):
+    """The numpy pieces of every SemDeDup pair kernel, returned as
+    closures so cloudpickle ships them by value (executors do not have
+    this package, and a module-level function pickles by reference):
 
-    def cell_pairs(pdf):
-        import numpy as np
-        import pandas as pd
+    - ``block(pdf)`` stacks a group's rows into (E, ids, norms);
+    - ``pairs(A, B, triangle)`` scores each row i of block A against
+      ``chunk``-row stripes of block B (only j > i when ``triangle``: A is
+      B, sorted by id) and returns (a ids, b ids, raw cosine) for every
+      pair at or above ``theta``, A's id first;
+    - ``frame(cid, a, b, c)`` builds the output frame, empty ones included.
 
-        pdf = pdf.sort_values("vec_id", ignore_index=True)
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {
-                "cid": pd.Series(dtype="int64"),
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cos_raw": pd.Series(dtype="float64"),
-            }
-        )
-        if n < 2:
-            return empty
-        E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["demb"]])
-        ids = pdf["vec_id"].to_numpy()
-        norms = pdf["norm"].to_numpy()
+    The dot product is ``np.cumsum`` over the elementwise product: the
+    same left fold ((p0+p1)+p2)+… as Spark's ``aggregate(zip_with(...))``
+    and DuckDB's ``list_dot_product`` loop (0.0 + p0 ≡ p0 in IEEE), so
+    every cosine is bit-equal to the SQL oracle's, and the product is
+    commutative, so block membership and orientation cannot change a bit.
+    Chunking the pair axis never splits one dot product: the chunk size
+    only caps the (chunk, dim) temporaries. The cosine stays raw; rounding
+    happens JVM-side with ``F.round`` (HALF_UP, DuckDB's convention —
+    ``np.round`` is half-to-even and would diverge on exact .5 ulps)."""
+    import numpy as np
+
+    def block(pdf):
+        if len(pdf):
+            E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["demb"]])
+        else:
+            E = np.empty((0, 0))
+        return E, pdf["vec_id"].to_numpy(), pdf["norm"].to_numpy()
+
+    def pairs(A, B, triangle):
+        (EA, ida, na), (EB, idb, nb) = A, B
         out_a, out_b, out_c = [], [], []
-        for i in range(n - 1):
-            for j0 in range(i + 1, n, chunk):
-                j1 = min(j0 + chunk, n)
-                # exact left-fold dot: cumsum reproduces ((p0+p1)+p2)+…
-                dots = np.cumsum(E[i] * E[j0:j1], axis=1)[:, -1]
-                cos = dots / (norms[i] * norms[j0:j1])
+        for i in range(len(ida)):
+            for j0 in range(i + 1 if triangle else 0, len(idb), chunk):
+                j1 = min(j0 + chunk, len(idb))
+                dots = np.cumsum(EA[i] * EB[j0:j1], axis=1)[:, -1]
+                cos = dots / (na[i] * nb[j0:j1])
                 m = cos >= theta
                 if m.any():
-                    out_a.append(np.full(int(m.sum()), ids[i]))
-                    out_b.append(ids[j0:j1][m])
+                    out_a.append(np.full(int(m.sum()), ida[i]))
+                    out_b.append(idb[j0:j1][m])
                     out_c.append(cos[m])
         if not out_a:
-            return empty
+            return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+        return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
+
+    def frame(cid, a, b, c):
+        import pandas as pd
+
         return pd.DataFrame(
             {
-                "cid": np.full(sum(len(x) for x in out_a), int(pdf["cid"].iloc[0])),
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cos_raw": np.concatenate(out_c),
+                "cid": np.full(len(a), cid, dtype=np.int64),
+                "vec_a": a,
+                "vec_b": b,
+                "cos_raw": c,
             }
         )
 
-    # explicit-width exchange on the group key (the groupBy's own exchange
-    # elides — the child is already hash-partitioned on cid): AQE's
-    # byte-based coalescing must not serialize a CPU-dense stage
-    # (_kernel_shuffle_width's measured case)
-    return (
-        cells.repartition(_kernel_shuffle_width(cells), "cid")
-        .groupBy("cid")
-        .applyInPandas(
-            cell_pairs, "cid long, vec_a long, vec_b long, cos_raw double"
-        )
-    )
+    return block, pairs, frame
 
 
 # l48's salt-split parameters: a cell is split into ⌈|cell|/SALT_TARGET⌉
 # blocks (capped at SALT_MAX so per-row replication — each row ships to
 # one group per peer block — stays bounded even for a pathological cell).
-# SALT_TARGET sits below the sf0.01 cell size (~250) ON PURPOSE: grading
-# then exercises both the diagonal and the cross-block kernel on every
-# cell, not just on a synthetic skew fixture.
+# SALT_TARGET sits inside the sf0.01 cell-size spread (8 cells of 48–70
+# vectors) ON PURPOSE: grading then runs the cross-block rectangles on the
+# cells above it, not just on a synthetic skew fixture.
 SEMDEDUP_SALT_TARGET = 64
 SEMDEDUP_SALT_MAX = 32
 
-# l52's per-cell routing threshold: cells at or below it run as ONE block
-# (n_blocks = 1 — the salt/peer machinery degenerates to exactly the
-# unsalted kernel: salt ≡ 0, one diagonal task, zero replication), cells
-# above it split. Set INSIDE the measured sf0.01 cell-size spread (8
+# l52's per-cell routing threshold: cells at or below it run as ONE block,
+# cells above it split. Set INSIDE the measured sf0.01 cell-size spread (8
 # cells of 48–70 vectors: K floors at K_MIN=8 there) ON PURPOSE, so the
 # driver's grading run routes some cells down each path — the adaptive
 # decision is the thing under test, not just one of its branches. A
@@ -1270,186 +1253,123 @@ SEMDEDUP_SALT_MAX = 32
 SEMDEDUP_ADAPTIVE_HOT = 64
 
 
-def _semdedup_pairs_salted(
+def _semdedup_pairs(
     cells: DataFrame,
+    hot_threshold: int | None = None,
     split_target: int = SEMDEDUP_SALT_TARGET,
     salt_max: int = SEMDEDUP_SALT_MAX,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
-    """Within-cell cosine pairs ≥ θ with HOT-CELL SALT-SPLIT (VERDICT r10
-    task 3 — the escape hatch ``_semdedup_pairs``'s docstring sketched,
-    now implemented): nearest-seed assignment guarantees only the
-    EXPECTED cell size (K ∝ N ⇒ ~CELL_TARGET); a clustered corpus can
-    still pour a large fraction of all vectors into ONE cell, and
-    ``applyInPandas`` ships a whole group to one task — the stage then
-    runs at the speed of that straggler doing C(M,2) work alone.
+    """Within-cell cosine pairs ≥ θ as (cid, vec_a, vec_b, cos_raw) with
+    vec_a < vec_b — the one SemDeDup pair kernel (l41, l48, l49, l52,
+    l41_semdedup_materialize).
 
-    The fix is block-partitioned all-pairs: each cell is cut into
-    S = min(⌈|cell|/split_target⌉, salt_max) hash blocks
+    Why numpy: the quadratic per-cell work runs as a vectorized kernel in
+    ``applyInPandas`` — one Arrow exchange keyed by cell, then C(|cell|,2)
+    dot products as array math (``_pair_kernel``). The self-join it
+    replaced folded each pair with an interpreted ``aggregate``/
+    ``zip_with`` that allocates a dim-sized array per pair: 3.97 s at the
+    8× stress scale, >580 s at 32× (allocation-bound, not FLOP-bound).
+    K ∝ N keeps the EXPECTED cell at CELL_TARGET, so parallelism grows
+    with the corpus and per-task memory stays bounded for balanced cells.
+
+    Hot cells: nearest-seed assignment bounds only the expected size. A
+    clustered corpus can pour a large share of all vectors into ONE cell,
+    and ``applyInPandas`` ships a whole group to one task, which then does
+    C(M,2) work alone. A hot cell is therefore cut into
+    S = min(⌈n_cell/split_target⌉, salt_max) blocks
     (salt = xxhash64(vec_id) mod S — deterministic, no RNG), and every
-    unordered block pair {lo, hi} becomes its own task keyed
-    (cid, lo, hi): a diagonal task (s, s) emits the triangular pairs of
-    block s; a cross task (lo < hi) emits the lo×hi rectangle. Every
-    vector pair lands in EXACTLY one task (same block → its diagonal;
-    different blocks → their one cross task), so the output is the same
-    pair set as the unsalted kernel — identical oracle — while the hot
-    cell's quadratic work spreads over S + C(S,2) tasks (528 at the cap)
-    with per-task memory 2·(|cell|/S)·dim instead of |cell|·dim.
+    unordered block pair {lo, hi} is its own task keyed (cid, lo, hi): a
+    diagonal task (s, s) emits block s's triangle, a cross task (lo < hi)
+    the lo × hi rectangle with ids ordered (min, max). Every vector pair
+    lands in exactly one task, so the pair set and every cosine bit equal
+    the one-block kernel's, while the cell's work spreads over S + C(S,2)
+    tasks (528 at the cap) at 2·(n_cell/S)·dim memory each. The price:
+    n_cell comes from a count() window over cid (an extra shuffle and
+    sort — two count-bearing aggregate rewrites were measured and were a
+    wash), and each row ships S× into the group shuffle.
 
-    Costs, honestly: per-cell sizes come from a count() window over cid
-    (one extra shuffle + within-partition sort of the vector stream —
-    exact sizes can't be known before assignment), and each row is
-    REPLICATED S× into the group shuffle (bounded by salt_max). For a
-    balanced corpus that overhead buys nothing — the unsalted kernel is
-    the default (l41); this variant is the opt-in for corpora known to
-    cluster (STRESS.md's hot-cell section measures the crossover: the
-    one-task kernel serializes, the salted one tracks work/32).
+    ``hot_threshold`` routes the cells:
 
-    Cross-engine determinism: per-pair cosine is the IDENTICAL
-    np.cumsum left-fold as the unsalted kernel — the elementwise product
-    is commutative, so block membership and rectangle orientation cannot
-    change a single bit; pairs are emitted (min_id, max_id) exactly as
-    the sorted triangular kernel does.
+    - ``None``: no cell is hot — every cell is one block grouped by cid
+      alone, and no window is built (l41, l49, l41_semdedup_materialize).
+      A balanced corpus never pays the window or the replication.
+    - ``0``: every cell splits (l48).
+    - ``n``: per cell at runtime — cells with n_cell ≤ n run as one block
+      (S = 1: salt ≡ 0, one diagonal task, no replication), larger cells
+      split (l52). The decision rides the window's count, so one clustered
+      corpus mixes both regimes in a single pass. STRESS.md's hot-cell
+      section measures the crossover (one task per cell serializes; the
+      split tracks work/32).
 
-    ``hot_threshold`` (l52's adaptive routing, VERDICT r11 task 6): when
-    set, cells with n_cell ≤ hot_threshold run as a SINGLE block —
-    n_blocks = 1 makes salt ≡ 0 and peer = [0], so the cell flows through
-    the one (cid, 0, 0) diagonal task with ZERO replication, byte-for-
-    byte the unsalted kernel's work — and only genuinely hot cells pay
-    the split. The routing decision rides the n_cell count the window
-    already computes, so it costs nothing extra, and it happens PER CELL
-    at runtime rather than per job at plan time: one clustered corpus can
-    mix both regimes in a single pass. This is the production default
-    shape; the always-split variant (l48) stays graded because it
-    exercises the cross-rectangle branch on every cell at grading
-    scale."""
-    theta = SEMDEDUP_THETA
-    chunk = SEMDEDUP_PAIR_CHUNK  # bound by value: executors lack the repo
-
-    n_blocks = F.least(
-        F.lit(salt_max),
-        F.ceil(F.col("n_cell") / F.lit(split_target)),
-    ).cast("int")
-    if hot_threshold is not None:
-        n_blocks = (
-            F.when(F.col("n_cell") <= F.lit(hot_threshold), F.lit(1))
-            .otherwise(n_blocks)
-            .cast("int")
-        )
-    # Round-13 measurement (VERDICT r12 task 4): replacing this count()
-    # window with a count-bearing aggregate was tried two ways and DECLINED
-    # — (a) lazy localCheckpoint + broadcast-joined groupBy counts, (b) a
-    # shared explicit repartition("cid") exchange consumed by both the
-    # counts aggregate and the salt stream (AQE ReusedExchange). Five-pass
-    # interleaved A/B, identical outputs: sf0.1 old 1.26–1.80 s vs (a)
-    # 1.37–1.78 vs (b) 1.30–1.66 — a wash; 32× stress old 3.7–4.4 vs (a)
-    # 3.8–4.4 vs (b) 4.2–6.0. The l52−l41 delta is the S×-replication the
-    # grading-scale HOT threshold deliberately exercises, not the window;
-    # and (a) additionally hides the MapInPandas E-step behind a Scan
-    # ExistingRDD, losing the family's plan-visible kernel evidence.
-    w = Window.partitionBy("cid")
-    salted = (
-        cells.withColumn("n_cell", F.count(F.lit(1)).over(w))
-        .withColumn("n_blocks", n_blocks)
-        .withColumn(
-            "salt", F.pmod(F.xxhash64("vec_id"), F.col("n_blocks")).cast("int")
-        )
-        # one output row per peer block: the row's own block pairs it with
-        # every block (diagonal when peer = salt), keyed order-free (lo, hi)
-        .withColumn("peer", F.explode(F.sequence(F.lit(0), F.col("n_blocks") - 1)))
-        .select(
-            "cid", "vec_id", "demb", "norm", "salt",
-            F.least("salt", "peer").alias("lo"),
-            F.greatest("salt", "peer").alias("hi"),
-        )
-    )
+    The exchange has an explicit width (``_kernel_shuffle_width``): the
+    whole point is parallelism, so AQE byte-coalescing must not glue the
+    block tasks back into two partitions (measured: 13.9 s → 2.7 s on the
+    hot-cell stress layout). ``SEMDEDUP_PAIR_CHUNK`` is read here, when
+    the plan is built."""
+    block, pairs, frame = _pair_kernel(SEMDEDUP_THETA, SEMDEDUP_PAIR_CHUNK)
 
     def block_pairs(key, pdf):
         import numpy as np
-        import pandas as pd
 
-        cid, lo, hi = (int(k) for k in key)
-        empty = pd.DataFrame(
-            {
-                "cid": pd.Series(dtype="int64"),
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cos_raw": pd.Series(dtype="float64"),
-            }
-        )
-        out_a, out_b, out_c = [], [], []
-        if lo == hi:  # diagonal: triangular pairs within one block
-            pdf = pdf.sort_values("vec_id", ignore_index=True)
-            n = len(pdf)
-            if n < 2:
-                return empty
-            E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["demb"]])
-            ids = pdf["vec_id"].to_numpy()
-            norms = pdf["norm"].to_numpy()
-            for i in range(n - 1):
-                for j0 in range(i + 1, n, chunk):
-                    j1 = min(j0 + chunk, n)
-                    # exact left-fold dot: cumsum reproduces ((p0+p1)+p2)+…
-                    dots = np.cumsum(E[i] * E[j0:j1], axis=1)[:, -1]
-                    cos = dots / (norms[i] * norms[j0:j1])
-                    m = cos >= theta
-                    if m.any():
-                        out_a.append(np.full(int(m.sum()), ids[i]))
-                        out_b.append(ids[j0:j1][m])
-                        out_c.append(cos[m])
-        else:  # cross: the lo-block × hi-block rectangle, min-id first
-            A = pdf[pdf["salt"] == lo]
-            B = pdf[pdf["salt"] == hi]
-            if len(A) and len(B):
-                EA = np.stack([np.asarray(v, dtype=np.float64) for v in A["demb"]])
-                EB = np.stack([np.asarray(v, dtype=np.float64) for v in B["demb"]])
-                ids_a = A["vec_id"].to_numpy()
-                ids_b = B["vec_id"].to_numpy()
-                na = A["norm"].to_numpy()
-                nb = B["norm"].to_numpy()
-                for i in range(len(A)):
-                    for j0 in range(0, len(B), chunk):
-                        j1 = min(j0 + chunk, len(B))
-                        dots = np.cumsum(EA[i] * EB[j0:j1], axis=1)[:, -1]
-                        cos = dots / (na[i] * nb[j0:j1])
-                        m = cos >= theta
-                        if m.any():
-                            sel = ids_b[j0:j1][m]
-                            out_a.append(np.minimum(ids_a[i], sel))
-                            out_b.append(np.maximum(ids_a[i], sel))
-                            out_c.append(cos[m])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "cid": np.full(sum(len(x) for x in out_a), cid),
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cos_raw": np.concatenate(out_c),
-            }
-        )
+        if len(key) == 1 or key[1] == key[2]:  # diagonal: one block's triangle
+            b = block(pdf.sort_values("vec_id", ignore_index=True))
+            ids_a, ids_b, cos = pairs(b, b, True)
+        else:  # cross: the lo × hi rectangle, ids ordered (min, max)
+            lo = block(pdf[pdf["salt"] == key[1]])
+            hi = block(pdf[pdf["salt"] == key[2]])
+            ids_a, ids_b, cos = pairs(lo, hi, False)
+            ids_a, ids_b = np.minimum(ids_a, ids_b), np.maximum(ids_a, ids_b)
+        return frame(int(key[0]), ids_a, ids_b, cos)
 
-    # explicit-width exchange on the block key — the whole point is
-    # parallelism, so the one thing this stage must never suffer is AQE
-    # byte-coalescing gluing the 528 block tasks back into two partitions
-    # (measured: 13.9 s → 2.7 s on the hot-cell stress layout)
+    keys = ["cid"]
+    if hot_threshold is not None:
+        n_blocks = (
+            F.when(F.col("n_cell") <= F.lit(hot_threshold), F.lit(1))
+            .otherwise(
+                F.least(
+                    F.lit(salt_max), F.ceil(F.col("n_cell") / F.lit(split_target))
+                )
+            )
+            .cast("int")
+        )
+        w = Window.partitionBy("cid")
+        cells = (
+            cells.withColumn("n_cell", F.count(F.lit(1)).over(w))
+            .withColumn("n_blocks", n_blocks)
+            .withColumn(
+                "salt", F.pmod(F.xxhash64("vec_id"), F.col("n_blocks")).cast("int")
+            )
+            # one output row per peer block: the row's own block pairs it
+            # with every block (diagonal when peer = salt), keyed (lo, hi)
+            .withColumn(
+                "peer", F.explode(F.sequence(F.lit(0), F.col("n_blocks") - 1))
+            )
+            .select(
+                "cid", "vec_id", "demb", "norm", "salt",
+                F.least("salt", "peer").alias("lo"),
+                F.greatest("salt", "peer").alias("hi"),
+            )
+        )
+        keys = ["cid", "lo", "hi"]
     return (
-        salted.repartition(_kernel_shuffle_width(salted), "cid", "lo", "hi")
-        .groupBy("cid", "lo", "hi")
-        .applyInPandas(
-            block_pairs, "cid long, vec_a long, vec_b long, cos_raw double"
-        )
+        cells.repartition(_kernel_shuffle_width(cells), *keys)
+        .groupBy(*keys)
+        .applyInPandas(block_pairs, SEMDEDUP_PAIR_SCHEMA)
+    )
+
+
+def _graded_pairs(
+    spark: SparkSession, sf_dir: str, hot_threshold: int | None = None
+) -> DataFrame:
+    """The graded SemDeDup pair projection shared by l41, l48, l49, l52."""
+    return _semdedup_pairs(_semdedup_cells(spark, sf_dir), hot_threshold).select(
+        "cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine")
     )
 
 
 @query(
     "l41_semdedup_pairs",
-    oracle=f"""
-        WITH {SQL_SEMDEDUP_ASG},
-        {SQL_SEMDEDUP_PAIRS}
-        SELECT cid, vec_a, vec_b, round(cos_raw, 6) AS cosine
-        FROM sem_pairs
-    """,
+    oracle=SQL_SEMDEDUP_PAIRS_ORACLE,
     tags=("L41", "L2", "L23", "eager", "plan_safe"),
 )
 def l41_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1465,111 +1385,54 @@ def l41_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     E-step broadcasts the K seed rows over the vector scan (no big-side
     shuffle; once K·dim outgrows a broadcast — K in the millions — the
     E-step becomes l3_ivf_ann's bucketed probe, same semantics); the pair
-    stage is an equi-join ON THE CELL KEY, never all-pairs, shuffling
+    stage is one task per cell (no cell is treated as hot), shuffling
     each vector once. Cross-engine determinism: the E-step reuses l23's proven
     d2 = vv − 2·ab + cc IEEE tree (cid tie-break); cosine reuses l4's
     ddot/(norm·norm) tree; the θ compare is on the raw double on both
     engines, the graded column rounds at 6dp.
     """
-    return _semdedup_pairs(_semdedup_cells(spark, sf_dir)).select(
-        "cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine")
-    )
+    return _graded_pairs(spark, sf_dir)
 
 
 @query(
     "l48_semdedup_salted",
-    oracle=f"""
-        WITH {SQL_SEMDEDUP_ASG},
-        {SQL_SEMDEDUP_PAIRS}
-        SELECT cid, vec_a, vec_b, round(cos_raw, 6) AS cosine
-        FROM sem_pairs
-    """,
+    oracle=SQL_SEMDEDUP_PAIRS_ORACLE,
     tags=("L48", "L41", "eager", "plan_safe"),
 )
 def l48_semdedup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup pairs via the HOT-CELL SALT-SPLIT kernel — semantically
-    identical to l41_semdedup_pairs (same oracle SQL, hash-graded against
-    the same self-join), executed as block-partitioned all-pairs so one
-    pathologically hot cell spreads over S + C(S,2) tasks instead of
-    serializing a stage (the skew case VERDICT r10 task 3 named; the
-    design notes live on ``_semdedup_pairs_salted``). SALT_TARGET = 64
-    sits inside the sf0.01 cell-size spread (8 cells of 48-70 vectors;
-    the ~250-vector cells appear at sf0.1, where K leaves its K_MIN
-    floor), so the driver's grading exercises BOTH kernel branches —
-    diagonal triangles everywhere, cross rectangles on the cells above
-    the target — and the correctness evidence covers the split machinery
-    itself, not a degenerate single-block run."""
-    return _semdedup_pairs_salted(_semdedup_cells(spark, sf_dir)).select(
-        "cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine")
-    )
+    """SemDeDup pairs with EVERY cell salt-split (``hot_threshold=0``; the
+    design is on ``_semdedup_pairs``): certifies that block-partitioned
+    all-pairs reproduces l41's oracle. SALT_TARGET = 64 sits inside the
+    sf0.01 cell-size spread (8 cells of 48-70 vectors), so grading runs
+    both the diagonal triangles and the cross rectangles."""
+    return _graded_pairs(spark, sf_dir, hot_threshold=0)
 
 
 @query(
     "l49_semdedup_fast_estep",
-    oracle=f"""
-        WITH {SQL_SEMDEDUP_ASG},
-        {SQL_SEMDEDUP_PAIRS}
-        SELECT cid, vec_a, vec_b, round(cos_raw, 6) AS cosine
-        FROM sem_pairs
-    """,
+    oracle=SQL_SEMDEDUP_PAIRS_ORACLE,
     tags=("L49", "L41", "eager", "plan_safe"),
 )
 def l49_semdedup_fast_estep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup pairs with the VECTORIZED E-step (``_assign_to_seeds_fast``)
-    — same seeds, same d2 bits, same argmin tie-break as l41's interpreted
-    JVM fold, hash-graded against the SAME DuckDB oracle to prove it. The
-    point is the engine swap on the family's dominant linear stage:
-    Catalyst's higher-order ``aggregate`` evaluates interpreted (~6-9 µs
-    per 64-dim seed-dot, measured round 11), so with K ∝ N the fold
-    E-step overtakes the quadratic pair kernel at mid corpus sizes; the
-    ``mapInPandas`` numpy kernel does the identical arithmetic at memory
-    bandwidth (measured 2× end-to-end at the 32× stress scale, where the
-    remaining cost is scan + Arrow transfer, not compute). Since round 12
-    the kernel IS the family default (``_semdedup_cells`` — l41/l47/l48
-    all run it), so this key and l41 grade the same plan; it stays
-    registered as the key that first proved the kernel against the
-    unchanged oracle. The all-JVM fold survives as the tested reference
-    path (``_assign_to_seeds``); a production corpus at K in the
-    millions graduates to the IVF probe instead."""
-    emb = load(spark, sf_dir, "embeddings")
-    cells = _assign_to_seeds_fast(emb, _semdedup_seeds(emb))
-    return _semdedup_pairs(cells).select(
-        "cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine")
-    )
+    """The key that first graded the vectorized E-step
+    (``_assign_to_seeds_fast``) against l41's unchanged oracle. That
+    kernel is now the family default, so this key runs l41's plan; the
+    all-JVM fold (``_assign_to_seeds``) stays as the tested reference."""
+    return l41_semdedup_pairs(spark, sf_dir)
 
 
 @query(
     "l52_semdedup_adaptive",
-    oracle=f"""
-        WITH {SQL_SEMDEDUP_ASG},
-        {SQL_SEMDEDUP_PAIRS}
-        SELECT cid, vec_a, vec_b, round(cos_raw, 6) AS cosine
-        FROM sem_pairs
-    """,
+    oracle=SQL_SEMDEDUP_PAIRS_ORACLE,
     tags=("L52", "L48", "L41", "eager", "plan_safe"),
 )
 def l52_semdedup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup pairs with PER-CELL ADAPTIVE kernel routing (VERDICT r11
-    task 6) — the production composition of l41 and l48: the cell-size
-    window (which the salted kernel already computes) routes each cell at
-    runtime, balanced cells (n ≤ SEMDEDUP_ADAPTIVE_HOT) through a single
-    zero-replication diagonal task — exactly the unsalted kernel's work —
-    and hot cells through the salt-split block tasks, in ONE pass with no
-    union and no second scan of the assignments. Same oracle as
-    l41/l48/l49: routing must not change a single pair or bit.
-
-    Why per-cell beats per-job: l41 (never split) serializes on one hot
-    cell (STRESS hot-cell section: 41.9 s vs 22.9 s on a ×261-work cell)
-    while l48 (always split) pays window + S× replication on every cell
-    of a BALANCED corpus for nothing; real corpora mix both regimes in
-    one run, so the choice belongs at the cell, where the count is
-    already sitting. SEMDEDUP_ADAPTIVE_HOT sits inside the measured
-    sf0.01 cell-size spread (48–70 vectors across 8 cells), so the
-    driver's grading run routes cells down BOTH paths — the decision
-    logic itself is what this key certifies."""
-    return _semdedup_pairs_salted(
-        _semdedup_cells(spark, sf_dir), hot_threshold=SEMDEDUP_ADAPTIVE_HOT
-    ).select("cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
+    """SemDeDup pairs with PER-CELL routing
+    (``hot_threshold=SEMDEDUP_ADAPTIVE_HOT``; the design is on
+    ``_semdedup_pairs``): certifies that routing changes no pair and no
+    bit. The threshold sits inside the sf0.01 cell-size spread (48–70
+    vectors across 8 cells), so grading routes cells down BOTH paths."""
+    return _graded_pairs(spark, sf_dir, hot_threshold=SEMDEDUP_ADAPTIVE_HOT)
 
 
 @query(
@@ -1709,80 +1572,20 @@ def l47_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band index: the gate grades end-to-end), which adds the one
     corpus-linear projection a backfill would amortize. Cross-engine
     determinism: the E-step is l41's proven d2 = vv − 2·ab + cc IEEE tree
-    (cid tie-break); the kernel's cumsum dot reproduces the oracle's
-    list_dot_product left fold with the NEW vector as the left operand,
-    and the norm product multiplies new·index in the oracle's order."""
+    (cid tie-break); the shared pair loop (``_pair_kernel``) reproduces
+    the oracle's list_dot_product left fold with the NEW vector as the
+    left operand, and the norm product multiplies new·index in the
+    oracle's order."""
     emb = load(spark, sf_dir, "embeddings")
     idx = emb.filter(F.col("vec_id") % 3 != 0)
-    sthr = idx.agg(
-        F.greatest(
-            F.lit(12), F.floor(F.count(F.lit(1)) * 3 / 500)
-        ).alias("sthr")
-    )
-    seeds = (
-        idx.join(F.broadcast(sthr))
-        .filter(F.col("vec_id") < F.col("sthr"))
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cid"),
-                F.transform("embedding", lambda x: x.cast("double")).alias("cemb"),
-                ddot("embedding", "embedding").alias("cc"),
-            ).alias("s")
-        )
-        .agg(F.array_sort(F.collect_list("s")).alias("seeds"))
-    )
-    cells = _assign_to_seeds_fast(emb, seeds)
-    theta = SEMDEDUP_THETA
-    chunk = SEMDEDUP_PAIR_CHUNK  # bound by value: executors lack the repo
+    cutoff = F.greatest(F.lit(12), F.floor(F.count(F.lit(1)) * 3 / 500))
+    cells = _assign_to_seeds_fast(emb, _semdedup_seeds(idx, cutoff))
+    block, pairs, frame = _pair_kernel(SEMDEDUP_THETA, SEMDEDUP_PAIR_CHUNK)
 
-    def cell_cross_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "cid": pd.Series(dtype="int64"),
-                "doc_new": pd.Series(dtype="int64"),
-                "dup_of": pd.Series(dtype="int64"),
-                "cos_raw": pd.Series(dtype="float64"),
-            }
-        )
-        ids = pdf["vec_id"].to_numpy()
-        newm = ids % 3 == 0
-        if not newm.any() or newm.all():
-            return empty
-        E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["demb"]])
-        norms = pdf["norm"].to_numpy()
-        En, Ei = E[newm], E[~newm]
-        idn, idi = ids[newm], ids[~newm]
-        nn, ni = norms[newm], norms[~newm]
-        out_n, out_i, out_c = [], [], []
-        for a in range(len(En)):
-            for j0 in range(0, len(Ei), chunk):
-                j1 = min(j0 + chunk, len(Ei))
-                # exact left-fold dot, new vector as the LEFT operand
-                dots = np.cumsum(En[a] * Ei[j0:j1], axis=1)[:, -1]
-                cos = dots / (nn[a] * ni[j0:j1])
-                m = cos >= theta
-                if m.any():
-                    out_n.append(np.full(int(m.sum()), idn[a]))
-                    out_i.append(idi[j0:j1][m])
-                    # raw cosine out: rounding happens JVM-side with
-                    # F.round (HALF_UP, DuckDB's convention) — np.round is
-                    # half-to-even and would diverge on exact .5 ulps
-                    out_c.append(cos[m])
-        if not out_n:
-            return empty
-        return pd.DataFrame(
-            {
-                "cid": np.full(
-                    sum(len(x) for x in out_n), int(pdf["cid"].iloc[0])
-                ),
-                "doc_new": np.concatenate(out_n),
-                "dup_of": np.concatenate(out_i),
-                "cos_raw": np.concatenate(out_c),
-            }
-        )
+    def cell_cross_pairs(key, pdf):
+        new = pdf["vec_id"].to_numpy() % 3 == 0
+        # the new × index rectangle, new vector first (the oracle's order)
+        return frame(int(key[0]), *pairs(block(pdf[new]), block(pdf[~new]), False))
 
     # explicit-width exchange on cid (see _kernel_shuffle_width): the
     # new-vs-index kernel is the same CPU-dense/byte-light shape AQE's
@@ -1790,10 +1593,13 @@ def l47_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cells.repartition(_kernel_shuffle_width(cells), "cid")
         .groupBy("cid")
-        .applyInPandas(
-            cell_cross_pairs, "cid long, doc_new long, dup_of long, cos_raw double"
+        .applyInPandas(cell_cross_pairs, SEMDEDUP_PAIR_SCHEMA)
+        .select(
+            "cid",
+            F.col("vec_a").alias("doc_new"),
+            F.col("vec_b").alias("dup_of"),
+            F.round("cos_raw", 6).alias("cosine"),
         )
-        .select("cid", "doc_new", "dup_of", F.round("cos_raw", 6).alias("cosine"))
     )
 
 

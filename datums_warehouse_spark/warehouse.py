@@ -88,12 +88,14 @@ class Warehouse:
         stored = self.table().join(F.broadcast(touched), "series", "left_semi")
         kept = stored.join(up.select("series", "ts"), ["series", "ts"], "left_anti")
         merged = up.unionByName(kept).localCheckpoint(eager=True)
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("series").parquet(self.path)
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # per-write option, not the session conf: toggling the shared
+        # session value races with any other writer on the same session
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("series")
+            .parquet(self.path)
+        )
         return merged.count()
 
     # -- read path ------------------------------------------------------------
@@ -156,6 +158,11 @@ class Warehouse:
             .parquet(staging)
         )
         old = self.path + ".old"
+        # a compact that died before its rmtree(old) finished leaves .old
+        # behind, and renaming onto a non-empty directory fails; ``path``
+        # exists here, so .old is stale, not the only copy of the data
+        if os.path.exists(old):
+            shutil.rmtree(old)
         os.rename(self.path, old)
         os.rename(staging, self.path)
         shutil.rmtree(old)

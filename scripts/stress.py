@@ -205,10 +205,11 @@ QUERIES = [
     # by design — so it gets its own part-scaled section (hierarchy_stress
     # below) instead of a flat row here.
     "l47_incremental_semdedup",
-    # round-11: the salt-split SemDeDup kernel — same oracle and output as
-    # l41, so the flat-row evidence here is "the split machinery scales
-    # like the unsalted kernel on BALANCED data"; its reason to exist (a
-    # hot cell) gets the dedicated semdedup_skew_stress section below.
+    # round-11: the SemDeDup pair kernel with every cell salt-split
+    # (hot_threshold=0) — same oracle and output as l41, so the flat-row
+    # evidence here is "the split machinery scales like one block per
+    # cell on BALANCED data"; its reason to exist (a hot cell) gets the
+    # dedicated semdedup_skew_stress section below.
     # sql5's recursion walks PART like sql4 and gets its own part-scaled
     # DAG section (dag_stress below) instead of a flat row.
     "l48_semdedup_salted",
@@ -225,7 +226,7 @@ QUERIES = [
     # artifact the direct oracle reproduces exactly, so the row stays a
     # full-value compare), PQ-ADC ANN (encode is corpus-linear, scoring
     # is |Q|·N lookups; the DuckDB encode join is N·M·K rows — 2M at 32×,
-    # feasible), and the per-cell adaptive SemDeDup routing (K ∝ N keeps
+    # feasible), and the pair kernel's per-cell routing (K ∝ N keeps
     # replicated cells at ~CELL_TARGET ≈ 250 > the 64 threshold, so at
     # 8×/32× every cell routes to the split path and the row measures
     # "adaptive tracks l48 when all-hot"; the mixed-regime evidence lives
@@ -858,9 +859,9 @@ def _cell_pair_work(spark, sf_dir: str) -> tuple[int, int]:
 
 
 def semdedup_skew_stress(spark, qs) -> list[str]:
-    """Measure l41 (one task per cell) vs l48 (salt-split block tasks) on
-    the hot-cell layout, oracle-verifying BOTH against the same DuckDB
-    self-join — the kernel-family analogue of j13's flash-crowd section
+    """Measure l41 (one task per cell) vs l48 (every cell split into block
+    tasks) and l52 (routed per cell) on the hot-cell layout,
+    oracle-verifying all three against the same DuckDB self-join — the kernel-family analogue of j13's flash-crowd section
     (VERDICT r10 task 3)."""
     q41 = qs["l41_semdedup_pairs"]
     q48 = qs["l48_semdedup_salted"]
@@ -899,8 +900,8 @@ def semdedup_skew_stress(spark, qs) -> list[str]:
     )
     return [
         "",
-        "## Skew stress — SemDeDup hot cell (l41 unsalted vs l48 "
-        "salt-split vs l52 adaptive)",
+        "## Skew stress — SemDeDup hot cell (l41 one block per cell vs "
+        "l48 every cell split vs l52 routed per cell)",
         "",
         "Clustered-embeddings layout: the base sf0.1 corpus plus "
         f"{HOTCELL_COPIES}× remixed replicas pointing ~cos {HOTCELL_A} at "
@@ -909,8 +910,8 @@ def semdedup_skew_stress(spark, qs) -> list[str]:
         "cosines stay mostly below θ = 0.40 (E[cos] ≈ a² ≈ 0.12) — "
         "quadratic pair WORK concentrates in one cell without the output "
         "exploding. `applyInPandas` ships a whole group to one task, so "
-        "the unsalted kernel (l41) serializes that cell's C(n,2) work in "
-        "one straggler; the salt-split kernel (l48) spreads it over "
+        "one block per cell (l41) serializes that cell's C(n,2) work in "
+        "one straggler; splitting every cell (l48) spreads it over "
         "S + C(S,2) = 528 block tasks. Both are hash-compared against the "
         "SAME DuckDB within-cell self-join on the hot layout. Timings "
         "median-of-3.",
@@ -929,17 +930,17 @@ def semdedup_skew_stress(spark, qs) -> list[str]:
         f"{rows48} | {v41}/{v48}/{v52} |",
         "",
         f"Verdict: pair work grew {work_ratio:.0f}× (nearly all of it in "
-        f"one cell); the unsalted kernel's wall grew {r41:.1f}× — the "
-        f"serialized straggler — while the salted kernel's grew {r48:.1f}× "
+        f"one cell); l41's wall grew {r41:.1f}× — the "
+        f"serialized straggler — while l48's grew {r48:.1f}× "
         f"(split speedup {speedup:.1f}× on the hot layout), with both "
         "outputs hash-identical to the oracle on the same files. On the "
         "BALANCED layout the split buys nothing and costs its window + "
-        "replication overhead — which is why l41 stays the plain kernel, "
-        "l48 the always-split opt-in, and l52 (round 12) routes PER CELL: "
-        "on the hot layout it must track l48's wall (the hot cell "
-        "crosses the threshold and splits) while cool cells keep the "
-        "plain kernel's zero-replication path — the number to check is "
-        "the adaptive column sitting at ~the salted one on the hot "
+        "replication overhead — which is why l41 keeps one block per "
+        "cell, l48 splits every cell as the opt-in, and l52 (round 12) "
+        "routes PER CELL: on the hot layout it must track l48's wall (the "
+        "hot cell crosses the threshold and splits) while cool cells keep "
+        "the one-block zero-replication path — the number to check is "
+        "the l52 column sitting at ~the l48 one on the hot "
         "layout and between the two on the balanced one.",
     ]
 

@@ -49,17 +49,18 @@ PANDAS_ALLOWED = {
     "x6_ema",                  # recursive filter: y[i] = f(y[i-1])
     "x3b_interpolate_scaled",  # chunked applyInPandas interpolation
     "l9_multimodal_features",  # mapInPandas binary feature extraction
-    # SemDeDup's within-cell pairwise cosine: dense linear algebra as a
-    # vectorized numpy kernel per cell (the brief's sanctioned pattern for
-    # similarity) — the interpreted per-pair SQL fold was allocation-bound
-    # and super-linear at the 32× stress scale; cumsum keeps the exact
-    # left-fold sum order so the SQL oracle still hash-matches.
-    "l41_semdedup_pairs",
-    "l41_semdedup_materialize",
-    "l47_incremental_semdedup",  # the same kernel pattern, new-vs-index
-    "l48_semdedup_salted",       # the same kernel, hot-cell salt-split
-    "l49_semdedup_fast_estep",   # vectorized E-step + the same pair kernel
-    "l52_semdedup_adaptive",     # per-cell routed variant of the same kernel
+    # SemDeDup's within-cell pairwise cosine: dense linear algebra as one
+    # vectorized numpy pair kernel (_semdedup_pairs, the brief's sanctioned
+    # pattern for similarity) — the interpreted per-pair SQL fold was
+    # allocation-bound and super-linear at the 32× stress scale; cumsum
+    # keeps the exact left-fold sum order so the SQL oracle still
+    # hash-matches.
+    "l41_semdedup_pairs",        # one block per cell
+    "l41_semdedup_materialize",  # one block per cell, then the drop rule
+    "l47_incremental_semdedup",  # the same pair loop, new × index per cell
+    "l48_semdedup_salted",       # every cell salt-split (hot_threshold=0)
+    "l49_semdedup_fast_estep",   # l41's plan, kept as the E-step's key
+    "l52_semdedup_adaptive",     # per-cell routing (SEMDEDUP_ADAPTIVE_HOT)
 }
 
 PANDAS_NODES = (

@@ -7,14 +7,16 @@
    equal the base-8 digit-count population (a pure-arithmetic reference,
    independent of both engines), and converging nodes exist at every
    depth ≥ 2 (the diamonds are real, not vacuously deduped).
-2. L48 salt-split SemDeDup kernel: the block partitioning is semantics-
-   free — its output must equal l41's unsalted output BIT-FOR-BIT (same
-   pair set, same raw cosines), and must be invariant to the split
-   factor (a tiny split_target forces many cross-block rectangles, the
-   code path a balanced corpus would underexercise).
+2. L48, the SemDeDup pair kernel with every cell salt-split
+   (``hot_threshold=0``): the block partitioning is semantics-free — its
+   output must equal l41's one-block-per-cell output BIT-FOR-BIT (same
+   pair set, same raw cosines), and must be invariant to the split factor
+   and the stripe chunk (a tiny split_target forces many cross-block
+   rectangles, the code path a balanced corpus would underexercise).
 3. The explicit-width kernel exchange (the AQE byte-coalescing fix) must
-   appear in all three kernel-family plans — the regression that
-   serialized a CPU-dense stage into two tasks stays fixed.
+   appear in the plans of every routing of the pair kernel and of l47 —
+   the regression that serialized a CPU-dense stage into two tasks stays
+   fixed.
 """
 
 from __future__ import annotations
@@ -102,15 +104,16 @@ def test_l48_equals_l41_bit_for_bit(spark, qs, sf_dir):
     assert a.equals(b)
 
 
-def test_l48_split_factor_invariance(spark, qs, sf_dir):
+def test_l48_split_factor_invariance(spark, qs, sf_dir, monkeypatch):
     """A split_target of 8 forces S-block splits and many cross-block
-    rectangles on every cell; the output must still equal the unsalted
+    rectangles on every cell; the output must still equal the one-block
     kernel's exactly — every unordered pair lands in exactly one block
-    task regardless of S."""
+    task regardless of S. A 3-row SEMDEDUP_PAIR_CHUNK runs the cross
+    rectangles in many stripes, which must not change a bit either."""
+    import datums_warehouse_spark.llm.similarity as S
     from datums_warehouse_spark.llm.similarity import (
         _semdedup_cells,
         _semdedup_pairs,
-        _semdedup_pairs_salted,
     )
     from pyspark.sql import functions as F
 
@@ -120,13 +123,17 @@ def test_l48_split_factor_invariance(spark, qs, sf_dir):
         .select("cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
         .toPandas()
     )
-    for target in (8, 64):
+    default = S.SEMDEDUP_PAIR_CHUNK
+    for target, chunk in ((8, default), (64, default), (8, 3)):
+        monkeypatch.setattr(S, "SEMDEDUP_PAIR_CHUNK", chunk)
         salted = (
-            _semdedup_pairs_salted(_semdedup_cells(spark, sf_dir), split_target=target)
+            _semdedup_pairs(
+                _semdedup_cells(spark, sf_dir), hot_threshold=0, split_target=target
+            )
             .select("cid", "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
             .toPandas()
         )
-        assert _sorted_pairs(salted).equals(_sorted_pairs(base)), target
+        assert _sorted_pairs(salted).equals(_sorted_pairs(base)), (target, chunk)
 
 
 def test_l48_exercises_cross_blocks_at_graded_size(spark, sf_dir):
@@ -217,3 +224,23 @@ def test_kernel_stages_pin_their_exchange_width(spark, qs, sf_dir, name):
 
     plan = formatted_plan(qs[name].fn(spark, sf_dir))
     assert "REPARTITION_BY_NUM" in plan, name
+
+
+@pytest.mark.parametrize(
+    "name,exchanges",
+    [("l41_semdedup_pairs", 2), ("l41_semdedup_materialize", 6)],
+)
+def test_one_block_routing_builds_no_window(spark, qs, sf_dir, name, exchanges):
+    """With no hot threshold the pair kernel groups by cid alone: no
+    count() window over the cells and no extra shuffle. Pins the sf0.01
+    plan's shuffle-Exchange mentions (node tree plus node details,
+    broadcasts excluded) at their measured values."""
+    import os
+    import re
+
+    from datums_warehouse_spark.testing.plans import formatted_plan
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    plan = formatted_plan(qs[name].fn(spark, sf001))
+    assert "Window" not in plan, plan
+    assert len(re.findall(r"(?<!Broadcast)Exchange", plan)) == exchanges, plan

@@ -8,8 +8,8 @@
 2. l52 adaptive routing (VERDICT r11 task 6): the per-cell n_blocks
    decision is semantics-free — on a layout that mixes cells BELOW and
    ABOVE the hot threshold, the routed kernel's pair set must equal the
-   unsalted kernel's bit-for-bit, while the routing column really does
-   take both values (one-block AND split) in the same pass.
+   one-block-per-cell kernel's bit-for-bit, while the routing column
+   really does take both values (one-block AND split) in the same pass.
 """
 
 from __future__ import annotations
@@ -106,7 +106,7 @@ def _synthetic_cells(spark, sizes: dict[int, int], dim: int = 8):
 def test_adaptive_routing_mixes_both_regimes_in_one_pass(spark):
     """On a layout with one balanced cell (below the threshold) and one
     hot cell (well above it), the routed kernel must (a) reproduce the
-    unsalted kernel's pair set exactly and (b) actually have routed the
+    one-block-per-cell pair set exactly and (b) actually have routed the
     cells differently — n_blocks = 1 for the cool cell, > 1 for the hot
     one — in the SAME job. (b) is what distinguishes l52 from either
     static parent; without it this test would pass on a plain l41."""
@@ -117,7 +117,6 @@ def test_adaptive_routing_mixes_both_regimes_in_one_pass(spark):
         SEMDEDUP_SALT_MAX,
         SEMDEDUP_SALT_TARGET,
         _semdedup_pairs,
-        _semdedup_pairs_salted,
     )
 
     hot = 64
@@ -125,7 +124,7 @@ def test_adaptive_routing_mixes_both_regimes_in_one_pass(spark):
 
     plain = _sorted_pairs(_semdedup_pairs(cells).toPandas())
     routed = _sorted_pairs(
-        _semdedup_pairs_salted(cells, hot_threshold=hot).toPandas()
+        _semdedup_pairs(cells, hot_threshold=hot).toPandas()
     )
     assert len(plain) > 0  # dense clusters ⇒ the θ predicate really fires
     assert plain.equals(routed)

@@ -4,6 +4,7 @@ real on-disk warehouse."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -200,3 +201,50 @@ def test_compact_multiple_target_files(spark, sf_dir, wh):
     after = {r.series: r.n_files for r in w.file_stats().collect()}
     assert all(1 <= n <= 4 for n in after.values()), after
     assert w.table().count() == _feed(spark, sf_dir).count()
+
+
+def test_merge_leaves_the_session_conf_alone(spark, sf_dir, wh, monkeypatch):
+    """merge() asks for dynamic partition overwrite on its own write, not
+    by toggling the shared session value (which races with other writers
+    on the session): with ``spark.conf.set`` raising, the upsert still
+    replaces the touched partition and leaves the others as they were."""
+    w, _ = wh
+    feed = _feed(spark, sf_dir)
+    w.ingest(feed)
+    updates = feed.filter(F.col("series") == "click").withColumn(
+        "value", F.col("value") * 2
+    )
+    total_before = w.table().count()
+
+    def refuse(*_a, **_k):
+        raise AssertionError("merge must not set session conf")
+
+    monkeypatch.setattr(spark.conf, "set", refuse)
+    w.merge(updates)
+    monkeypatch.undo()
+
+    assert w.table().count() == total_before
+    revised = {r.event_id: r.value for r in w.series("click").collect()}
+    assert revised == {r.event_id: r.value for r in updates.collect()}
+    got = sorted((r.event_id, r.value) for r in w.series("view").collect())
+    exp = sorted(
+        (r.event_id, r.value)
+        for r in feed.filter(F.col("series") == "view").collect()
+    )
+    assert got == exp
+
+
+def test_compact_clears_a_stale_old_directory(spark, sf_dir, wh):
+    """A compact that died before removing ``<path>.old`` leaves it behind;
+    the next compact must not fail renaming onto it, and the data must
+    come through intact."""
+    w, _ = wh
+    w.ingest(_feed(spark, sf_dir))
+    expected = sorted((r.event_id, r.value) for r in w.table().collect())
+    os.makedirs(w.path + ".old")
+    with open(os.path.join(w.path + ".old", "part-stale.parquet"), "w") as f:
+        f.write("stale")
+
+    assert w.compact() == len(expected)
+    assert sorted((r.event_id, r.value) for r in w.table().collect()) == expected
+    assert not os.path.exists(w.path + ".old")
