@@ -1,18 +1,28 @@
 """Vector similarity search over the embeddings table (SURVEY.md §2.11
-L3/L4/L10).
+L3/L4/L10 and the L22-L52 embedding queries).
 
-Exact variants are graded against DuckDB (`list_dot_product` over
-double-cast lists accumulates bit-identically to Spark's ``F.aggregate``
-fold — verified empirically); the LSH variant is the at-scale path and is
-graded rows-only.
+The ANN family is one filter-and-refine skeleton (REPOSE, ICDE 2021:
+prune candidates, then refine exactly). A query batch (``_query_batch``)
+probes the corpus; a candidate generator narrows each query's neighbors;
+the survivors are scored, and ``_topk`` keeps the k best per query. Only
+the generator differs between the six graded top-k queries:
 
-Scale shapes:
-- brute-force top-k broadcasts the (small) query set over the candidate
-  scan — O(|Q|·N) with no shuffle of the big side;
-- kNN restricted to an equi-bucket (label) turns all-pairs into a
-  per-bucket join;
-- at 100 TB, `l3_lsh_ann` (BucketedRandomProjectionLSH) bounds candidates
-  per bucket; the exact queries remain the correctness oracle on samples.
+- ``l3_cosine_topk``: every vector (broadcast queries × full scan);
+- ``l3_ivf_ann``: the members of the query's NPROBE nearest coarse cells;
+- ``l3_sq_ann``: every vector, scored on uint8 codes;
+- ``l3_matryoshka_ann``: a shortlist by cosine on a 16-dim prefix;
+- ``l42_srp_ann``: vectors sharing a sign-random-projection band;
+- ``l51_pq_ann``: every vector, scored by PQ asymmetric distance.
+
+Cosine scoring is one expression (``_cosine``), and l3_cosine, l3_ivf,
+l42 and MRL's second stage share one refine step (``_rerank_topk``).
+``l4_knn_within_label`` runs the same ``_topk`` tail with every vector
+as a query and its label bucket as the candidates. The
+dot products (``list_dot_product`` over double-cast lists and Spark's
+``F.aggregate`` fold) accumulate bit-identically, so every graded query
+matches its DuckDB oracle exactly. ``l3_lsh_ann`` (MLlib
+BucketedRandomProjectionLSH) hashes with model-internal RNG state and is
+graded on rows only.
 """
 
 from __future__ import annotations
@@ -28,6 +38,27 @@ SQL_DDOT = (
     "list_dot_product(list_transform({a}, x -> CAST(x AS DOUBLE)),"
     " list_transform({b}, x -> CAST(x AS DOUBLE)))"
 )
+SQL_QC_DOT = SQL_DDOT.format(a="q.embedding", b="c.embedding")
+
+# (vec_id, embedding, norm) over the whole table: l3_cosine's and l42's CTE
+SQL_NORMED = f"""normed AS (
+            SELECT vec_id, embedding,
+                   sqrt({SQL_DDOT.format(a="embedding", b="embedding")}) AS norm
+            FROM embeddings
+        )"""
+
+# exact cosine re-rank of a (query_id, neighbor_id) frame joined to
+# normed q and c: l42's and MRL's final select
+SQL_RERANK = f"""SELECT query_id, neighbor_id,
+               round({SQL_QC_DOT}
+                     / (q.norm * c.norm), 6) AS cosine,
+               CAST(row_number() OVER (
+                   PARTITION BY query_id
+                   ORDER BY {SQL_QC_DOT}
+                            / (q.norm * c.norm) DESC, neighbor_id
+               ) AS BIGINT) AS rn"""
+
+QUERY_BATCH = 10  # queries per batch: batch b is b*10 <= vec_id < (b+1)*10
 
 
 def ddot(a: Column | str, b: Column | str) -> Column:
@@ -52,20 +83,80 @@ def with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn("norm", F.sqrt(ddot("embedding", "embedding")))
 
 
+def _cosine(dot: Column, na: str, nb: str) -> Column:
+    """dot / (na · nb), NULL when either norm is zero. An all-zero vector
+    is a failed embedding: under ANSI mode a plain division would raise
+    DIVIDE_BY_ZERO and kill the job, and DuckDB's oracle returns NULL for
+    x / 0.0. Both engines sort that NULL last under DESC."""
+    return F.try_divide(dot, F.col(na) * F.col(nb))
+
+
+def _query_batch(df: DataFrame, batch: int = 0) -> DataFrame:
+    """The rows of query batch ``batch``: QUERY_BATCH consecutive vec_ids
+    (batch 0 for l3_cosine, l3_sq, MRL and l42; batch 1 for l3_ivf and
+    l51)."""
+    v = F.col("vec_id")
+    pred = v < (batch + 1) * QUERY_BATCH
+    if batch:
+        pred = (v >= batch * QUERY_BATCH) & pred
+    return df.filter(pred)
+
+
+def _side(normed: DataFrame, p: str) -> DataFrame:
+    """One side of a pair join from (vec_id, embedding, norm):
+    (query_id, q_emb, q_norm) for ``p="q"``, (neighbor_id, c_emb, c_norm)
+    for ``p="c"``."""
+    return normed.select(
+        F.col("vec_id").alias("query_id" if p == "q" else "neighbor_id"),
+        F.col("embedding").alias(f"{p}_emb"),
+        F.col("norm").alias(f"{p}_norm"),
+    )
+
+
+def _join_vectors(cand: DataFrame, normed: DataFrame) -> DataFrame:
+    """Attach each side's embedding and norm to (query_id, neighbor_id)
+    candidate ids: the broadcast query side, then the candidate side."""
+    return cand.join(F.broadcast(_side(normed, "q")), "query_id").join(
+        _side(normed, "c"), "neighbor_id"
+    )
+
+
+def _topk(scored: DataFrame, score: str, k: int, asc: bool = False) -> DataFrame:
+    """The k best ``score`` rows per query_id, numbered 1..k in ``rn``.
+
+    Ties break on neighbor_id, so both engines select identical rows. The
+    filter on ``rn`` lets Spark put a WindowGroupLimit in front of the
+    window's exchange: each partition keeps only its k best rows per
+    query, which bounds the per-query work."""
+    order = F.col(score).asc() if asc else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w).cast("long")).filter(
+        F.col("rn") <= k
+    )
+
+
+def _rerank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The refine step: score (query_id, neighbor_id) pairs that carry
+    q_emb/q_norm and c_emb/c_norm by exact cosine, keep the top k per
+    query, round the cosine to 6 places."""
+    scored = pairs.withColumn(
+        "cosine_raw", _cosine(ddot("q_emb", "c_emb"), "q_norm", "c_norm")
+    )
+    return _topk(scored, "cosine_raw", k).select(
+        "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine"), "rn"
+    )
+
+
 @query(
     "l3_cosine_topk",
     oracle=f"""
-        WITH normed AS (
-            SELECT vec_id, embedding,
-                   sqrt({SQL_DDOT.format(a="embedding", b="embedding")}) AS norm
-            FROM embeddings
-        )
+        WITH {SQL_NORMED}
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round({SQL_DDOT.format(a="q.embedding", b="c.embedding")}
+               round({SQL_QC_DOT}
                      / (q.norm * c.norm), 6) AS cosine,
                CAST(row_number() OVER (
                    PARTITION BY q.vec_id
-                   ORDER BY {SQL_DDOT.format(a="q.embedding", b="c.embedding")}
+                   ORDER BY {SQL_QC_DOT}
                             / (q.norm * c.norm) DESC, c.vec_id
                ) AS BIGINT) AS rn
         FROM normed q JOIN normed c ON q.vec_id < 10 AND c.vec_id != q.vec_id
@@ -74,36 +165,12 @@ def with_norm(df: DataFrame) -> DataFrame:
     tags=("L3",),
 )
 def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for the first 10 query vectors.
-
-    The exact ANN baseline: broadcast queries × scan candidates, fold the
-    dot product JVM-side, per-query top-k via WindowGroupLimit. Ties break
-    on neighbor_id so both engines select identical rows.
-    """
+    """Brute-force cosine top-5: every vector is a candidate of every
+    query (broadcast queries × candidate scan), the exact ANN baseline."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
-    q = F.broadcast(
-        emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    cos = ddot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    pairs = (
-        q.join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine_raw", cos)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_raw").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine"), "rn")
-    )
+    q = F.broadcast(_side(_query_batch(emb), "q"))
+    pairs = q.join(_side(emb, "c"), F.col("neighbor_id") != F.col("query_id"))
+    return _rerank_topk(pairs, 5)
 
 
 @query(
@@ -132,11 +199,12 @@ def l4_knn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The kNN-join restricted to an equi-bucket: the label equality turns the
     quadratic all-pairs into a per-bucket product — the same shape an
-    IVF-partitioned index produces at scale.
+    IVF-partitioned index produces at scale. Every vector is a query.
     """
     emb = load(spark, sf_dir, "embeddings").withColumn("norm2", ddot("embedding", "embedding"))
     a = emb.select(
-        F.col("vec_id"), F.col("label"), F.col("embedding").alias("a_emb"), F.col("norm2").alias("a_n2")
+        F.col("vec_id").alias("query_id"), F.col("label"),
+        F.col("embedding").alias("a_emb"), F.col("norm2").alias("a_n2"),
     )
     b = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -146,13 +214,11 @@ def l4_knn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d2 = F.col("a_n2") + F.col("b_n2") - 2 * ddot("a_emb", "b_emb")
     pairs = a.join(
-        b, (F.col("label") == F.col("b_label")) & (F.col("vec_id") != F.col("neighbor_id"))
+        b, (F.col("label") == F.col("b_label")) & (F.col("query_id") != F.col("neighbor_id"))
     ).withColumn("d2", d2)
-    w = Window.partitionBy("vec_id").orderBy("d2", "neighbor_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "neighbor_id", F.round("d2", 6).alias("dist2"))
+    return _topk(pairs, "d2", 1, asc=True).select(
+        F.col("query_id").alias("vec_id"), "label", "neighbor_id",
+        F.round("d2", 6).alias("dist2"),
     )
 
 
@@ -202,10 +268,9 @@ def l4_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("demb").alias("b_emb"),
         F.col("norm").alias("b_norm"),
     )
-    cos = ddot_pre("a_emb", "b_emb") / (F.col("a_norm") * F.col("b_norm"))
     return (
         a.join(b, (F.col("label") == F.col("b_label")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cosine_raw", cos)
+        .withColumn("cosine_raw", _cosine(ddot_pre("a_emb", "b_emb"), "a_norm", "b_norm"))
         .filter(F.col("cosine_raw") >= 0.28)
         .select("vec_a", "vec_b", "label", F.round("cosine_raw", 6).alias("cosine"))
     )
@@ -300,18 +365,17 @@ SQL_IVF_D2 = (
     tags=("L3",),
 )
 def l3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) approximate NN, fully oracle-graded.
+    """IVF (inverted-file) ANN over query batch 1: a query's candidates
+    are the members of its NPROBE nearest coarse cells, ~NPROBE/K of the
+    corpus instead of all of it.
 
-    The textbook IVF shape: a small coarse quantizer partitions the corpus
-    into K cells (inverted lists); each query probes only its NPROBE
-    nearest cells and scores candidates there — touching ~NPROBE/K of the
-    data instead of all of it. Coarse centroids here are seed vectors
-    (vec_id < K) rather than k-means output so cell assignment is exact
-    deterministic arithmetic both engines reproduce; at 100 TB the
-    centroids would come from k-means on a driver-side sample (still tiny
-    and broadcast), the assignment cross-join stays N×K, and the inverted
-    lists would be written bucketed by cell so a probe is a partition-
-    pruned scan, not a shuffle.
+    The coarse centroids are seed vectors (vec_id < K) rather than
+    k-means output, so cell assignment is exact deterministic arithmetic
+    both engines reproduce. At 100 TB the centroids would come from
+    k-means on a driver-side sample (still tiny and broadcast), the
+    assignment cross-join stays N×K, and the inverted lists would be
+    written bucketed by cell so a probe is a partition-pruned scan, not a
+    shuffle.
     """
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "norm2", ddot("embedding", "embedding")
@@ -333,20 +397,10 @@ def l3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = ranked.filter(F.col("rn") == 1).select(
         F.col("vec_id").alias("member_id"), F.col("seed_id").alias("cell")
     )
-    probes = ranked.filter(
-        (F.col("rn") <= IVF_NPROBE) & (F.col("vec_id") >= 10) & (F.col("vec_id") < 20)
-    ).select(F.col("vec_id").alias("query_id"), F.col("seed_id").alias("probe_cell"))
+    probes = _query_batch(ranked.filter(F.col("rn") <= IVF_NPROBE), 1).select(
+        F.col("vec_id").alias("query_id"), F.col("seed_id").alias("probe_cell")
+    )
     normed = emb.select("vec_id", "embedding", F.sqrt("norm2").alias("norm"))
-    q = normed.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    c = normed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
     cand = (
         probes.join(
             assign,
@@ -354,18 +408,8 @@ def l3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("member_id") != F.col("query_id")),
         )
         .select("query_id", F.col("member_id").alias("neighbor_id"))
-        .join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("cosine_raw", ddot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")))
     )
-    w_top = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w_top).cast("long"))
-        .filter(F.col("rn") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine"), "rn")
-    )
+    return _rerank_topk(_join_vectors(cand, normed), IVF_TOPK)
 
 
 SQ_LEVELS = 255  # uint8 quantization levels
@@ -419,23 +463,17 @@ SQL_SQ_QUANT = f"""
     tags=("L3",),
 )
 def l3_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized (uint8) nearest-neighbor search: per-dimension
-    min/max → 8-bit codes → exact integer dot-product top-k.
+    """Scalar-quantized (uint8) search: every vector is a candidate,
+    scored by the integer dot product of 8-bit codes (per-dimension
+    min/max → code), the SQ8 stage FAISS IVF-SQ runs in each probed cell.
+    Codes are 4× smaller than float32, and the score is integer-exact
+    (products ≤ 255²·dim ≪ 2⁵³), so quantize, score and rank are graded
+    bit-for-bit.
 
-    The memory-bandwidth scale path: codes are 4× smaller than float32, so
-    a brute-force scan streams 4× more vectors per second (and the integer
-    dot product is SIMD-friendly); this is the SQ8 stage every production
-    IVF index (FAISS IVF-SQ) runs inside each probed cell. Scoring is
-    integer-exact (products ≤ 255²·dim ≪ 2⁵³), so the whole pipeline —
-    quantize, score, rank — is graded against the oracle bit-for-bit.
-
-    The per-dimension stats are dim-sized (64 values): folded into the DAG
-    as a broadcast 1-row array aggregate — NOT collected on the driver at
-    construction time, which would run a blocking full scan before the
-    query executes (tests/test_laziness.py pins this). Quantization
-    arithmetic is written identically in both engines
-    ((v - mn) * (LEVELS / (mx - mn)), floor, clamp) so the codes match
-    exactly; a dimension with mx == mn quantizes to 0.
+    The dim-sized stats are a broadcast 1-row array aggregate in the DAG,
+    not a driver collect (tests/test_laziness.py pins this). Both engines
+    spell the quantization identically ((v - mn) * (LEVELS / (mx - mn)),
+    floor, clamp); a dimension with mx == mn quantizes to 0.
     """
     emb = load(spark, sf_dir, "embeddings")
     by_pos = F.array_sort(F.collect_list(F.struct("pos", "mn", "mx")))
@@ -459,9 +497,7 @@ def l3_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.crossJoin(F.broadcast(stats)).select(
         "vec_id", F.transform("embedding", quant).alias("q")
     )
-    a = qv.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qa")
-    )
+    a = _query_batch(qv).select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"))
     b = qv.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"))
     dot = F.aggregate(
         F.zip_with("qa", "qb", lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
@@ -471,12 +507,7 @@ def l3_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(b, F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", dot)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= SQ_TOPK)
-        .select("query_id", "neighbor_id", "score", "rn")
-    )
+    return _topk(pairs, "score", SQ_TOPK).select("query_id", "neighbor_id", "score", "rn")
 
 
 @query("l3_lsh_ann", tags=("L3",))
@@ -484,9 +515,9 @@ def l3_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via random-projection LSH (rows-only: model hashing
     isn't reproducible in SQL).
 
-    The 100 TB similarity path: bucket vectors with
-    BucketedRandomProjectionLSH, then approxSimilarityJoin only compares
-    within-bucket candidates (SURVEY.md §4.3.2).
+    Bucket vectors with BucketedRandomProjectionLSH, then
+    approxSimilarityJoin only compares within-bucket candidates (SURVEY.md
+    §4.3.2); l42_srp_ann is the hash-graded twin.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
@@ -498,8 +529,7 @@ def l3_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         inputCol="features", outputCol="hashes", bucketLength=2.0, numHashTables=3, seed=42
     )
     model = lsh.fit(emb)
-    queries = emb.filter(F.col("vec_id") < 10)
-    joined = model.approxSimilarityJoin(queries, emb, threshold=4.0, distCol="dist")
+    joined = model.approxSimilarityJoin(_query_batch(emb), emb, threshold=4.0, distCol="dist")
     return joined.select(
         F.col("datasetA.vec_id").alias("query_id"),
         F.col("datasetB.vec_id").alias("neighbor_id"),
@@ -533,14 +563,7 @@ SQL_PREF_DDOT = f"list_dot_product({_SQL_PREF.format(v='{a}')}, {_SQL_PREF.forma
                          / (q.pnorm * c.pnorm) DESC, c.vec_id
             ) <= {MRL_SHORTLIST}
         )
-        SELECT query_id, neighbor_id,
-               round({SQL_DDOT.format(a="q.embedding", b="c.embedding")}
-                     / (q.norm * c.norm), 6) AS cosine,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY {SQL_DDOT.format(a="q.embedding", b="c.embedding")}
-                            / (q.norm * c.norm) DESC, neighbor_id
-               ) AS BIGINT) AS rn
+        {SQL_RERANK}
         FROM shortlist s
         JOIN normed q ON q.vec_id = s.query_id
         JOIN normed c ON c.vec_id = s.neighbor_id
@@ -549,18 +572,14 @@ SQL_PREF_DDOT = f"list_dot_product({_SQL_PREF.format(v='{a}')}, {_SQL_PREF.forma
     tags=("L3",),
 )
 def l3_matryoshka_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval over Matryoshka-style embedding prefixes:
-    shortlist by cosine on the first 16 dims (4× less arithmetic and
-    memory traffic), then rerank the shortlist with the full 64-dim
-    cosine — the cheap-prefilter / exact-rerank pattern production
-    retrieval runs (MRL prefixes, PQ/SQ codes, or int8 all slot into the
-    same two-stage plan).
-
-    Stage 1 scans the corpus once per query batch (broadcast queries, like
-    l3_cosine_topk) but on prefix slices; stage 2 touches only
-    |queries| × SHORTLIST rows. Both stages are exact deterministic
-    arithmetic with id tie-breaks, so the full two-stage pipeline is
-    oracle-graded.
+    """Two-stage retrieval over Matryoshka-style embedding prefixes: the
+    candidates are a SHORTLIST-row top-k by cosine on the first 16 dims
+    (4× less arithmetic and memory traffic than the full vector), which
+    the full 64-dim cosine then re-ranks — the cheap-prefilter /
+    exact-rerank pattern of production retrieval (MRL prefixes, PQ/SQ
+    codes or int8 all slot into the same two stages). Stage 1 scans the
+    corpus once per query batch, like l3_cosine_topk but on prefix
+    slices; stage 2 touches only |queries| × SHORTLIST rows.
     """
     emb = load(spark, sf_dir, "embeddings")
     pref = F.slice("embedding", 1, MRL_DIMS)
@@ -572,7 +591,7 @@ def l3_matryoshka_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         pref.alias("pref"),
     )
     q = F.broadcast(
-        n.filter(F.col("vec_id") < 10).select(
+        _query_batch(n).select(
             F.col("vec_id").alias("query_id"),
             F.col("pref").alias("q_pref"),
             F.col("pnorm").alias("q_pnorm"),
@@ -585,29 +604,12 @@ def l3_matryoshka_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pref").alias("c_pref"),
         F.col("pnorm").alias("c_pnorm"),
     )
-    pcos = ddot("q_pref", "c_pref") / (F.col("q_pnorm") * F.col("c_pnorm"))
-    w1 = Window.partitionBy("query_id").orderBy(F.col("pcos").desc(), "neighbor_id")
-    shortlist = (
-        q.join(c1, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("pcos", pcos)
-        .withColumn("prn", F.row_number().over(w1))
-        .filter(F.col("prn") <= MRL_SHORTLIST)
-        .select("query_id", "neighbor_id", "q_emb", "q_norm")
+    pcos = _cosine(ddot("q_pref", "c_pref"), "q_pnorm", "c_pnorm")
+    pairs = q.join(c1, F.col("neighbor_id") != F.col("query_id")).withColumn("pcos", pcos)
+    shortlist = _topk(pairs, "pcos", MRL_SHORTLIST).select(
+        "query_id", "neighbor_id", "q_emb", "q_norm"
     )
-    c2 = n.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    cos = ddot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine_raw").desc(), "neighbor_id")
-    return (
-        shortlist.join(c2, "neighbor_id")
-        .withColumn("cosine_raw", cos)
-        .withColumn("rn", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rn") <= MRL_TOPK)
-        .select("query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine"), "rn")
-    )
+    return _rerank_topk(shortlist.join(_side(n, "c"), "neighbor_id"), MRL_TOPK)
 
 
 @query(
@@ -1606,13 +1608,9 @@ def l47_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- l42: sign-random-projection LSH ANN (Charikar 2002, SimHash for
 # vectors) -------------------------------------------------------------
 #
-# The hash-gradable LSH-ANN: l3_lsh_ann (MLlib BucketedRandomProjectionLSH)
-# is rows-only because MLlib seeds its projections from model-internal RNG
-# state DuckDB cannot replay. Here the hyperplanes are a PUBLIC
-# deterministic function of (bit, dim) — an LCG evaluated identically by
-# both engines — so the whole pipeline (signature → band buckets →
-# candidate join → exact re-rank) is one cross-engine-reproducible plan
-# and the family's scale path earns a full value-hash grade.
+# l3_lsh_ann is rows-only because MLlib seeds its projections from RNG state
+# DuckDB cannot replay. Here the hyperplanes are a public LCG of (bit, dim)
+# that both engines evaluate identically, so the whole pipeline is graded.
 
 SRP_BITS = 32  # signature width
 SRP_BANDS = 8  # 8 bands x 4 bits: band collision prob = (1 - theta/pi)^4
@@ -1703,19 +1701,8 @@ def _srp_bands(emb: DataFrame) -> DataFrame:
             FROM bands q JOIN bands c ON q.band = c.band AND q.bandval = c.bandval
             WHERE q.vec_id < 10 AND c.vec_id != q.vec_id
         ),
-        normed AS (
-            SELECT vec_id, embedding,
-                   sqrt({SQL_DDOT.format(a="embedding", b="embedding")}) AS norm
-            FROM embeddings
-        )
-        SELECT query_id, neighbor_id,
-               round({SQL_DDOT.format(a="q.embedding", b="c.embedding")}
-                     / (q.norm * c.norm), 6) AS cosine,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY {SQL_DDOT.format(a="q.embedding", b="c.embedding")}
-                            / (q.norm * c.norm) DESC, neighbor_id
-               ) AS BIGINT) AS rn
+        {SQL_NORMED}
+        {SQL_RERANK}
         FROM cand JOIN normed q ON q.vec_id = cand.query_id
                   JOIN normed c ON c.vec_id = cand.neighbor_id
         QUALIFY rn <= 5
@@ -1724,74 +1711,35 @@ def _srp_bands(emb: DataFrame) -> DataFrame:
 )
 def l42_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection LSH top-5 (Charikar 2002) — the deterministic,
-    hash-graded twin of the rows-only l3_lsh_ann.
+    hash-graded twin of the rows-only l3_lsh_ann. A query's candidates are
+    the vectors sharing ANY of its 8 band values (32-bit signature, 8 bands
+    × 4 bits; collision prob per band ≈ (1 − θ/π)^4), which prunes ~3× of
+    the corpus per query here.
 
-    Pipeline: (1) 32-bit SRP signature per vector — a pure projection;
-    (2) 8-band × 4-bit LSH bucketing — candidates are pairs sharing ANY
-    band value (collision prob per band ≈ (1 − θ/π)^4, the standard
-    banding amplification), pruning ~3× of the corpus per query here;
-    (3) exact cosine re-rank of survivors, top-5 per query, ties on
-    neighbor_id.
-
-    Scale shape: signatures ride the scan (codegen, no shuffle); the band
-    join shuffles 8-byte (band, bandval) keys, not embeddings; the query
-    side is a 10-row broadcast; re-rank joins fetch only candidate
-    embeddings. At 100 TB the corpus side would be written bucketed by
-    (band, bandval) so probes partition-prune, exactly like l3_ivf_ann's
-    inverted lists. Recall is banding-bounded, not exact — the re-rank is
-    exact over candidates, and the l37-style calibration play (compare to
-    l3_cosine_topk on a sample) QA's the bit width."""
+    The signatures ride the scan (codegen, no shuffle) and the band join
+    shuffles 8-byte (band, bandval) keys, not embeddings. At 100 TB the
+    corpus side would be written bucketed by (band, bandval) so probes
+    partition-prune, like l3_ivf_ann's inverted lists. Recall is
+    banding-bounded: the refine is exact only over the candidates."""
     emb = load(spark, sf_dir, "embeddings")
     bands = _srp_bands(emb)
-    q_bands = F.broadcast(
-        bands.filter(F.col("vec_id") < 10).withColumnRenamed("vec_id", "query_id")
-    )
+    q_bands = F.broadcast(_query_batch(bands).withColumnRenamed("vec_id", "query_id"))
     cand = (
         q_bands.join(bands, ["band", "bandval"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    normed = with_norm(emb)
-    qn = F.broadcast(
-        normed.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
-    )
-    cn = normed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    cos = ddot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_raw").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(qn, "query_id")
-        .join(cn, "neighbor_id")
-        .withColumn("cosine_raw", cos)
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine"), "rn")
-    )
+    return _rerank_topk(_join_vectors(cand, with_norm(emb)), 5)
 
 
-# --- L51: product-quantization ANN (ADC) --------------------------------------
+# --- L51: product-quantization ANN (ADC; Jégou, Douze, Schmid 2011) ---------
 #
-# Jégou, Douze, Schmid 2011, "Product Quantization for Nearest Neighbor
-# Search" (public) — the last major public ANN family next to the graded
-# IVF (l3_ivf_ann), scalar quantization (l3_sq_ann), SRP-LSH (l42) and
-# Matryoshka (l3_matryoshka_ann) variants: split the space into M
-# orthogonal subspaces, quantize each subspace against its own small
-# codebook (memory drops from dim doubles to M bytes per vector), and
-# score queries with Asymmetric Distance Computation — the query stays
-# exact, each candidate costs M table lookups instead of a dim-length
-# dot product. Codebooks here are seed sub-vectors (vec_id < PQ_K, the
-# l23/l3_ivf convention: deterministic arithmetic both engines reproduce
-# exactly, no k-means RNG), so the full pipeline is hash-graded.
+# Split the space into M subspaces, quantize each against its own small
+# codebook (dim doubles → M bytes per vector) and score with Asymmetric
+# Distance Computation: the query stays exact, each candidate costs M table
+# lookups. Codebooks are seed sub-vectors (vec_id < PQ_K, the l23/l3_ivf
+# convention), so there is no k-means RNG and the pipeline is hash-graded.
 
 PQ_M = 8       # subspaces (64 dims → 8 per subspace)
 PQ_DSUB = 8    # dims per subspace
@@ -1901,33 +1849,23 @@ def _pq_codebook(emb: DataFrame) -> DataFrame:
     tags=("L51", "L3"),
 )
 def l51_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with ADC scoring, fully oracle-graded:
-    top-{PQ_TOPK} neighbors for the l3_ivf query set (10 ≤ vec_id < 20)
-    under the PQ-approximated squared distance.
+    """Product-quantization ANN over query batch 1: every vector is a
+    candidate, scored by the PQ-approximated squared distance (ADC,
+    ascending). No cross join and nothing collected:
 
-    Scale shape — the three PQ stages map onto Spark cleanly with NO
-    cross join and nothing collected:
-    (1) ENCODE is a pure projection: the (m,k)-sorted codebook array
-        (PQ_M·PQ_K structs, a few KB) rides a broadcast 1-row join, and
-        each vector's M codes come from an argmin fold over its
-        subspace's PQ_K-entry slice — zero fan-out, zero shuffle; the
-        corpus is scanned once and reduced to M small ints per vector
-        (the 32× memory story: 64 floats → 8 nibbles in a real config).
-        At production scale the fold swaps for the l49 mapInPandas
-        kernel (proven bit-identical there) — semantics unchanged.
+    (1) ENCODE is a projection: the (m,k)-sorted codebook array (PQ_M·PQ_K
+        structs, a few KB) rides a broadcast 1-row join, and each vector's
+        M codes come from an argmin fold over its subspace's PQ_K-entry
+        slice, reducing the corpus to M small ints per vector. At
+        production scale the fold swaps for the l49 mapInPandas kernel.
     (2) The QUERY-side lookup table (M·K query-to-codeword distances) is
-        a per-query projection over the same broadcast codebook,
-        computed ONCE per query — ADC's whole point.
-    (3) SCORING broadcasts the tiny (query_id, lut) table over the
-        encoded corpus: each candidate costs M array lookups + M adds —
-        no distance recomputation, no shuffle of the big side; top-k is
-        the l3 window (WindowGroupLimit prunes per partition).
-    Cross-engine determinism: sub-distances reuse the proven
-    d2 = (vv − 2·ab) + cc IEEE tree per subspace with strict-< lowest-k
-    tie-break over the k-ascending codebook slice (the oracle's
-    two-hash-aggregate argmin); the ADC sum folds m-ascending from 0.0
-    (≡ the oracle's left-associative 8-term chain, 0.0 + x ≡ x); ranking
-    ties break on neighbor_id."""
+        computed once per query — ADC's whole point.
+    (3) SCORING broadcasts the tiny (query_id, lut) table over the encoded
+        corpus: each candidate costs M lookups + M adds.
+    Cross-engine determinism: sub-distances reuse the d2 = (vv − 2·ab) + cc
+    IEEE tree per subspace with a strict-< lowest-k tie-break (the
+    oracle's two-hash-aggregate argmin); the ADC sum folds m-ascending
+    from 0.0 (≡ the oracle's left-associative 8-term chain)."""
     emb = load(spark, sf_dir, "embeddings")
     cb = _pq_codebook(emb)
 
@@ -1966,9 +1904,7 @@ def l51_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # (2) query LUT: all M·K query-to-codeword distances, one projection
-    luts = with_subspaces(
-        emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20))
-    ).select(
+    luts = with_subspaces(_query_batch(emb, 1)).select(
         F.col("vec_id").alias("query_id"),
         F.transform(
             "cb",
@@ -1984,17 +1920,11 @@ def l51_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, m: acc + F.get("lut", m * PQ_K + F.get("codes", m)),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_raw").asc(), F.col("neighbor_id").asc()
-    )
-    return (
+    pairs = (
         F.broadcast(luts)
         .join(coded, F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_raw", adc)
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("adc_raw", 6).alias("adc_d2"), "rn",
-        )
+    )
+    return _topk(pairs, "adc_raw", PQ_TOPK, asc=True).select(
+        "query_id", "neighbor_id", F.round("adc_raw", 6).alias("adc_d2"), "rn"
     )

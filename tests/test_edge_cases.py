@@ -321,6 +321,50 @@ def test_sq_ann_constant_dimension_quantizes_to_zero(spark, monkeypatch):
     assert [n for _, n, _ in q0] == [1, 2, 3, 4, 5]
 
 
+def test_zero_norm_vectors_match_the_oracle(spark, monkeypatch, tmp_path):
+    """An all-zero vector (a failed embedding) must not abort the job:
+    under ANSI mode a plain cosine division raises DIVIDE_BY_ZERO, while
+    DuckDB returns NULL for x / 0.0 and both engines rank NULL last. Ids 3
+    and 25 are all-zero; id 12 has a zero 16-dim MRL prefix."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import datums_warehouse_spark.llm.similarity as SIM
+    from datums_warehouse_spark import all_queries
+    from datums_warehouse_spark.testing.compare import compare_frames
+
+    vecs = np.random.default_rng(11).standard_normal((40, 64)).astype(np.float32)
+    vecs[[3, 25]] = 0.0
+    vecs[12, :16] = 0.0
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(40), pa.int64()),
+                "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+                "label": pa.array([i % 4 for i in range(40)], pa.int32()),
+            }
+        ),
+        path,
+    )
+    monkeypatch.setattr(SIM, "load", lambda s, d, n: spark.read.parquet(path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    queries = all_queries()
+    for name in (
+        "l3_cosine_topk", "l3_ivf_ann", "l3_matryoshka_ann", "l42_srp_ann",
+        "l4_embedding_neardup", "l3_sq_ann", "l51_pq_ann", "l4_knn_within_label",
+    ):
+        q = queries[name]
+        res = compare_frames(
+            name, q.fn(spark, "x").toPandas(), con.execute(q.oracle).fetchdf()
+        )
+        assert res.ok, f"{name}: {res.detail}"
+    con.close()
+
+
 def test_bigrams_short_and_empty_docs_survive(spark, monkeypatch):
     """l7/l32 on docs with <2 whitespace tokens must yield NO bigrams, not
     INVALID_ARRAY_INDEX_IN_ELEMENT_AT: sequence(0, size-2) DESCENDS when

@@ -72,10 +72,18 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_topk_per_group_uses_window_group_limit(spark, sf_dir):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "w7_topk_per_group", "l3_cosine_topk", "l3_ivf_ann", "l3_sq_ann",
+        "l3_matryoshka_ann", "l42_srp_ann", "l51_pq_ann", "l4_knn_within_label",
+    ],
+)
+def test_topk_per_group_uses_window_group_limit(name, spark, sf_dir):
     """rank-then-filter must push the k-limit into the window operator
-    (WindowGroupLimit, Spark 3.5+) instead of ranking every row."""
-    plan = plan_of("w7_topk_per_group", spark, sf_dir)
+    (WindowGroupLimit, Spark 3.5+) instead of ranking every row — for the
+    ANN family's shared top-k tail as for w7."""
+    plan = plan_of(name, spark, sf_dir)
     assert "WindowGroupLimit" in plan
 
 
