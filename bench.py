@@ -1,7 +1,8 @@
 """Headline benchmark — prints ONE JSON line for the driver.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], timing each to its
+last row (``observe.timed_pass``), and prints
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
 """
 
@@ -16,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datums_warehouse_spark import all_queries
+from datums_warehouse_spark.observe import timed_pass
 from datums_warehouse_spark.session import cpus, get_spark
 
 # Headline set: the flagship + one representative per operator family.
@@ -61,7 +63,7 @@ HEADLINE = [
     # round-12 additions: C4 cross-corpus line dedup (the new heavy text
     # stage — token-window split + corpus hash count + reassembly) and
     # the SemDeDup pair kernel with per-cell routing (the family's
-    # production shape; its delta vs l41 is the count() window plus the
+    # production shape; its delta vs l41 is the per-cell count plus the
     # hot cells' block replication)
     "l50_c4_line_dedup",
     "l52_semdedup_adaptive",
@@ -90,7 +92,6 @@ def main() -> None:
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     spark = get_spark("bench")
 
-    from datums_warehouse_spark.llm.dedup import release_caches
     # Machine-speed calibration: fixed synthetic work (no I/O, no shuffle —
     # one codegen'd range-agg) whose wall time tracks the sandbox's CPU
     # speed that round. r03→r04 and r07→r08 both showed uniform ~1.4×
@@ -111,7 +112,7 @@ def main() -> None:
     # warm pass: JVM JIT, parquet footers, plan compilation — measured passes
     # reflect steady-state execution, comparable round over round
     for name in names:
-        qs[name].fn(spark, sf_dir).count()
+        timed_pass(spark, qs[name].fn, sf_dir)
 
     # per-query median over `repeats` post-warm passes: a single pass is at
     # the mercy of sandbox scheduling noise (r03→r04 showed a uniform 1.4×
@@ -126,22 +127,9 @@ def main() -> None:
 
     escalated: dict[str, int] = {}
 
-    def _timed_pass(name: str) -> None:
-        # Each timed pass builds its own dedup index (llm/dedup.py): the
-        # index is a real within-session win (l2 pairs, clusters, l26 and
-        # l29 all read one pair pipeline), but letting it survive from the
-        # warm pass or a prior timed pass would turn the timed pass into a
-        # scan of cached pairs and exclude the shingle → signature → verify
-        # build from every published number. Released OUTSIDE the timer:
-        # the unpersist is harness bookkeeping, not query work.
-        release_caches()
-        t0 = time.perf_counter()
-        qs[name].fn(spark, sf_dir).count()
-        runs[name].append(time.perf_counter() - t0)
-
     for name in names:
         for _ in range(repeats):
-            _timed_pass(name)
+            runs[name].append(timed_pass(spark, qs[name].fn, sf_dir))
         # noise guard: an unstable median gets more passes before
         # publication — contention is transient, so extra samples usually
         # pull the median back to the steady state. A sub-3 repeats
@@ -149,7 +137,7 @@ def main() -> None:
         if repeats >= 3 and _spread_ratio(runs[name]) > SPREAD_RATIO_LIMIT:
             before = len(runs[name])
             while len(runs[name]) < ESCALATED_REPEATS:
-                _timed_pass(name)
+                runs[name].append(timed_pass(spark, qs[name].fn, sf_dir))
             # report a query as escalated only when extra passes ran
             # (repeats may already be at ESCALATED_REPEATS)
             if len(runs[name]) > before:
@@ -169,7 +157,6 @@ def main() -> None:
     noisy_heavy = [n for n in noisy_out if timings[n] >= NOISY_MEDIAN_FLOOR_SEC]
     total = sum(timings.values())
 
-    release_caches()  # drop the last dedup index before reporting
     print(
         json.dumps(
             {

@@ -1286,19 +1286,21 @@ def _semdedup_pairs(
     lands in exactly one task, so the pair set and every cosine bit equal
     the one-block kernel's, while the cell's work spreads over S + C(S,2)
     tasks (528 at the cap) at 2·(n_cell/S)·dim memory each. The price:
-    n_cell comes from a count() window over cid (an extra shuffle and
-    sort — two count-bearing aggregate rewrites were measured and were a
-    wash), and each row ships S× into the group shuffle.
+    n_cell comes from a ``groupBy("cid").count()`` broadcast-joined back
+    on cid (a partial aggregate, so a hot cell is counted across tasks
+    instead of sorted through one window task before the split), and each
+    row ships S× into the group shuffle.
 
     ``hot_threshold`` routes the cells:
 
     - ``None``: no cell is hot — every cell is one block grouped by cid
-      alone, and no window is built (l41, l49, l41_semdedup_materialize).
-      A balanced corpus never pays the window or the replication.
+      alone, and no cell count is built (l41, l49,
+      l41_semdedup_materialize). A balanced corpus never pays the count or
+      the replication.
     - ``0``: every cell splits (l48).
     - ``n``: per cell at runtime — cells with n_cell ≤ n run as one block
       (S = 1: salt ≡ 0, one diagonal task, no replication), larger cells
-      split (l52). The decision rides the window's count, so one clustered
+      split (l52). The decision rides the per-cell count, so one clustered
       corpus mixes both regimes in a single pass. STRESS.md's hot-cell
       section measures the crossover (one task per cell serializes; the
       split tracks work/32).
@@ -1334,9 +1336,9 @@ def _semdedup_pairs(
             )
             .cast("int")
         )
-        w = Window.partitionBy("cid")
+        n_cell = cells.groupBy("cid").agg(F.count(F.lit(1)).alias("n_cell"))
         cells = (
-            cells.withColumn("n_cell", F.count(F.lit(1)).over(w))
+            cells.join(F.broadcast(n_cell), "cid")
             .withColumn("n_blocks", n_blocks)
             .withColumn(
                 "salt", F.pmod(F.xxhash64("vec_id"), F.col("n_blocks")).cast("int")

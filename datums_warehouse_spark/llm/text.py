@@ -23,22 +23,24 @@ def TOKS():
     return F.split("text", " ")
 
 
-def bigrams_of(toks):
-    """Adjacent-bigram array over a token array, safe for short docs.
+def ngrams_of(toks, n: int):
+    """Adjacent word-n-gram array over a token array, safe for short docs.
 
-    ``F.sequence(0, size-2)`` on a 1-token doc yields the DESCENDING
-    sequence [0, -1]; ``element_at(toks, 0)`` then throws
-    INVALID_ARRAY_INDEX_IN_ELEMENT_AT — Spark's sequence() counts down
-    when stop < start, unlike DuckDB's range() which yields []. Guarding
-    on size >= 2 makes Spark match the oracle's empty-list semantics on
-    empty/1-token docs (real corpora contain them even though the graded
-    fixtures have a 10-token floor).
+    ``F.sequence(0, size-n)`` on a doc with fewer than n tokens yields a
+    DESCENDING sequence ([0, -1] for a 1-token doc at n = 2);
+    ``element_at(toks, 0)`` then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT
+    — Spark's sequence() counts down when stop < start, unlike DuckDB's
+    range() which yields []. Guarding on size >= n makes Spark match the
+    oracle's empty-list semantics on empty and short docs (real corpora
+    contain them even though the graded fixtures have a 10-token floor).
     """
-    bigram = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 2),
-        lambda i: F.concat_ws(" ", F.element_at(toks, i + 1), F.element_at(toks, i + 2)),
+    gram = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
+        ),
     )
-    return F.when(F.size(toks) >= 2, bigram).otherwise(F.array().cast("array<string>"))
+    return F.when(F.size(toks) >= n, gram).otherwise(F.array().cast("array<string>"))
 
 EN_STOPWORDS = ("the", "of", "and", "a", "to", "in", "is", "it", "on", "for")
 
@@ -130,7 +132,7 @@ def l7_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return (
         d.select(F.split("text", " ").alias("toks"))
-        .select(F.explode(bigrams_of(F.col("toks"))).alias("bigram"))
+        .select(F.explode(ngrams_of(F.col("toks"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -513,21 +515,10 @@ def l20_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     is rounded only for display.
     """
     d = load(spark, sf_dir, "documents").filter(F.size(TOKS()) >= 3)
-    toks = F.col("toks")
-    idx = F.sequence(F.lit(0), F.size(toks) - 3)
-    trigram = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
     rep = (F.col("n_trigrams") - F.col("n_distinct")) / F.col("n_trigrams").cast("double")
     return (
         d.select("doc_id", TOKS().alias("toks"))
-        .select("doc_id", trigram.alias("tg"))
+        .select("doc_id", ngrams_of(F.col("toks"), 3).alias("tg"))
         .select(
             "doc_id",
             F.size("tg").cast("long").alias("n_trigrams"),
@@ -598,20 +589,11 @@ def l21_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents"), "doc_id").filter(
         F.size(TOKS()) >= 3
     )
-    toks = F.col("toks")
-    idx = F.sequence(F.lit(0), F.size(toks) - 3)
-    trigram = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
     grams = (
         d.select("source", TOKS().alias("toks"))
-        .select("source", F.explode(F.array_distinct(trigram)).alias("g"))
+        .select(
+            "source", F.explode(F.array_distinct(ngrams_of(F.col("toks"), 3))).alias("g")
+        )
         .groupBy("g")
         .agg(F.collect_set("source").alias("ss"))
     )
@@ -1004,7 +986,7 @@ def l32_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     doc_bg = d.select(
         "source", F.split("text", " ").alias("toks")
-    ).select("source", F.explode(bigrams_of(F.col("toks"))).alias("bigram"))
+    ).select("source", F.explode(ngrams_of(F.col("toks"), 2)).alias("bigram"))
     counts = doc_bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("freq"))
     return (
         doc_bg.join(counts, "bigram")
@@ -1183,17 +1165,7 @@ def l35_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = F.least(n_tok.cast("double") / 50, F.lit(1.0)) * (
         F.size(F.array_distinct(toks)).cast("double") / n_tok
     )
-    tg_raw = F.transform(
-        F.sequence(F.lit(0), n_tok - 3),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
-    # short-doc guard: sequence(0, -k) counts DOWN in Spark (l32's class)
-    tg = F.when(n_tok >= 3, tg_raw).otherwise(F.array().cast("array<string>"))
+    tg = ngrams_of(toks, 3)
     rep_ok = (F.size(tg) == 0) | (
         (F.size(tg) - F.size(F.array_distinct(tg))).cast("double") / F.size(tg) <= FUNNEL_REP_MAX
     )
@@ -1473,7 +1445,7 @@ def l39_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     doc_bg = d.select(
         "doc_id", "lang", F.split("text", " ").alias("toks")
-    ).select("doc_id", "lang", F.explode(bigrams_of(F.col("toks"))).alias("bigram"))
+    ).select("doc_id", "lang", F.explode(ngrams_of(F.col("toks"), 2)).alias("bigram"))
     counts = doc_bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("freq"))
     scored = (
         doc_bg.join(counts, "bigram")
@@ -1526,20 +1498,6 @@ def l39_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- l43: Gopher repetition filters (Rae et al. 2021, §A1.1) -----------
-
-
-def ngrams_of(toks, n: int):
-    """Adjacent word-n-gram array over a token array, safe for short docs
-    (the bigrams_of guard generalized: Spark's sequence() counts DOWN when
-    stop < start, so docs with fewer than n tokens must short-circuit to
-    [] the way DuckDB's range() does)."""
-    gram = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(toks) >= n, gram).otherwise(F.array().cast("array<string>"))
 
 
 @query(

@@ -5,8 +5,9 @@ harness shows the other axis — fixed data (sf0.1), growing cores — i.e.
 whether the plans actually parallelize or are serialized behind a
 single-task stage (the local-mode proxy for "would 1000 executors help?").
 Each core count runs in a FRESH subprocess (Spark master is fixed at
-session start) with shuffle partitions = cores, one warm pass then
-median-of-3, writing CORESCALE.md.
+session start) with shuffle partitions = cores, one warm pass then the
+min of 3 timed passes (``observe.timed_pass``: each query to its last
+row), writing CORESCALE.md.
 
 Measured on the 8x-replicated stress warehouse (4.8M lineitem, 800k
 events, 40k documents), NOT raw sf0.1: at sf0.1 every headline query
@@ -74,37 +75,23 @@ QUERIES = [
 ]
 
 _CHILD = r"""
-import json, sys, time
+import json, sys
 sys.path.insert(0, {root!r})
-from pyspark.sql import SparkSession
 from datums_warehouse_spark import all_queries
-from datums_warehouse_spark.llm.dedup import release_caches
+from datums_warehouse_spark.observe import timed_pass
+from datums_warehouse_spark.session import get_spark
 
-cores = {cores}
-spark = (
-    SparkSession.builder.appName(f"corescale-{{cores}}")
-    .master(f"local[{{cores}}]")
-    # same heap at every core count (session.get_spark's default) so the
-    # curve measures parallelism, not memory pressure; the fresh-JVM
-    # subprocess is what makes this setting take effect
-    .config("spark.driver.memory", "16g")
-    .config("spark.sql.shuffle.partitions", str(cores))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-)
+# the master comes from SPARK_GRAFT_CPUS in this child's environment; the
+# fresh JVM is what makes that (and the same heap at every core count)
+# take effect
+spark = get_spark("corescale-{cores}")
+spark.conf.set("spark.sql.shuffle.partitions", "{cores}")
 qs = all_queries()
 out = {{}}
 for name in {queries!r}:
     fn = qs[name].fn
-    fn(spark, {sf_dir!r}).count()  # warm: JIT, footers, plan compilation
-    ts = []
-    for _ in range(3):
-        release_caches()  # each timed pass builds its own dedup index
-        t0 = time.perf_counter()
-        fn(spark, {sf_dir!r}).count()
-        ts.append(time.perf_counter() - t0)
+    timed_pass(spark, fn, {sf_dir!r})  # warm: JIT, footers, plan compilation
+    ts = [timed_pass(spark, fn, {sf_dir!r}) for _ in range(3)]
     # min-of-passes, not median (round 12): this sandbox's contention is
     # one-sided — a pass is either clean or stalled (the r11 idle re-runs
     # measured 6.5x per-query swings on UNCHANGED code, and two back-to-
@@ -136,8 +123,11 @@ def ensure_layout() -> str:
 
 def run_at(cores: int, sf_dir: str) -> dict[str, float]:
     code = _CHILD.format(root=ROOT, cores=cores, queries=QUERIES, sf_dir=sf_dir)
+    env = {**os.environ, "SPARK_GRAFT_CPUS": str(cores)}
+    env.pop("SPARK_GRAFT_MASTER", None)  # would override the core count
     proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=1800
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=1800, env=env,
     )
     for line in proc.stdout.splitlines():
         if line.startswith("CORESCALE_JSON:"):

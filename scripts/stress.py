@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 import numpy as np
 import pandas as pd
@@ -27,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark import all_queries
-from datums_warehouse_spark.llm.dedup import release_caches
+from datums_warehouse_spark.observe import timed_pass
 from datums_warehouse_spark.session import get_spark
 from datums_warehouse_spark.sources.tables import TABLES, load, normalize_ts
 from datums_warehouse_spark.testing.compare import compare_frames
@@ -202,7 +201,7 @@ QUERIES = [
     # within index-derived cells — candidate work is output-bounded like
     # l41, direct oracle feasible at every multiplier). sql4's recursion
     # walks the PART hierarchy — a dimension the shared layout keeps 1×
-    # by design — so it gets its own part-scaled section (hierarchy_stress
+    # by design — so it gets its own part-scaled section (recursion_stress
     # below) instead of a flat row here.
     "l47_incremental_semdedup",
     # round-11: the SemDeDup pair kernel with every cell salt-split
@@ -211,7 +210,7 @@ QUERIES = [
     # cell on BALANCED data"; its reason to exist (a hot cell) gets the
     # dedicated semdedup_skew_stress section below.
     # sql5's recursion walks PART like sql4 and gets its own part-scaled
-    # DAG section (dag_stress below) instead of a flat row.
+    # DAG section (recursion_stress below) instead of a flat row.
     "l48_semdedup_salted",
     # round-11 session 2: the vectorized E-step variant — the row measures
     # whether swapping the interpreted fold for the numpy mapInPandas
@@ -443,51 +442,71 @@ def layout_dir(mult: int) -> str:
     return os.path.join("/tmp", "dws_stress", f"m{mult}v2")
 
 
-def build_scaled(spark, mult: int) -> str:
-    # v2: ts written as TIMESTAMP_NTZ
-    out = layout_dir(mult)
+def _layout(name: str, own: tuple[str, ...], write) -> str:
+    """The layout directory ``/tmp/dws_stress/<name>``, built once: every
+    base table outside ``own`` is symlinked to the sf0.1 files,
+    ``write(out)`` writes the ``own`` tables, then a ``_built`` marker
+    makes later calls return the directory as is."""
+    out = os.path.join("/tmp", "dws_stress", name)
     marker = os.path.join(out, "_built")
     if os.path.exists(marker):
         return out
     os.makedirs(out, exist_ok=True)
     for t in TABLES:
-        df = load(spark, BASE_SF, t)
-        if "ts" in df.columns:
-            df = normalize_ts(df)  # canonical TimestampType before shifting
-        if t in FACT_KEYS:
-            keys = FACT_KEYS[t]
-            strides = {k: df.agg(F.max(k)).collect()[0][0] + 1 for k in keys}
-            copies = []
-            for i in range(mult):
-                c = df
-                for k in keys:
-                    c = c.withColumn(k, F.col(k) + F.lit(i * strides[k]))
-                if "ts" in df.columns:
-                    # nudge each copy by i µs: same bucket densities, no
-                    # duplicate (series, ts) collisions across copies
-                    c = c.withColumn(
-                        "ts", F.timestamp_micros(F.unix_micros("ts") + F.lit(i))
-                    )
-                copies.append(c)
-            df = copies[0]
-            for c in copies[1:]:
-                df = df.unionByName(c)
-        if "ts" in df.columns:
-            # Write ts as TIMESTAMP_NTZ (parquet isAdjustedToUTC=false) so
-            # DuckDB sees naive wall-clock values exactly like the base
-            # testdata's TIMESTAMP(NANOS) — a TimestampType write would make
-            # the oracles' CAST(ts AS TIMESTAMP) DuckDB-session-tz-dependent
-            # (ADVICE r05). Pure NTZ epoch arithmetic, no LTZ cast.
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, unix_micros(ts),"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        df.write.mode("overwrite").parquet(os.path.join(out, f"{t}.parquet"))
+        dst = os.path.join(out, f"{t}.parquet")
+        if t not in own and not os.path.exists(dst):
+            os.symlink(os.path.join(BASE_SF, f"{t}.parquet"), dst)
+    write(out)
     open(marker, "w").write("ok")
     return out
+
+
+def _write_table(df, out: str, table: str) -> None:
+    """Write ``df`` as ``<out>/<table>.parquet``, any ``ts`` column as
+    TIMESTAMP_NTZ (parquet isAdjustedToUTC=false) so DuckDB sees naive
+    wall-clock values exactly like the base testdata's TIMESTAMP(NANOS) —
+    a TimestampType write would make the oracles' CAST(ts AS TIMESTAMP)
+    DuckDB-session-tz-dependent (ADVICE r05). Pure NTZ epoch arithmetic,
+    no LTZ cast."""
+    if "ts" in df.columns:
+        df = df.withColumn(
+            "ts",
+            F.expr(
+                "timestampadd(MICROSECOND, unix_micros(ts),"
+                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+            ),
+        )
+    df.write.mode("overwrite").parquet(os.path.join(out, f"{table}.parquet"))
+
+
+def build_scaled(spark, mult: int) -> str:
+    def write(out: str) -> None:
+        for t in TABLES:
+            df = load(spark, BASE_SF, t)
+            if "ts" in df.columns:
+                df = normalize_ts(df)  # canonical TimestampType before shifting
+            if t in FACT_KEYS:
+                keys = FACT_KEYS[t]
+                strides = {k: df.agg(F.max(k)).collect()[0][0] + 1 for k in keys}
+                copies = []
+                for i in range(mult):
+                    c = df
+                    for k in keys:
+                        c = c.withColumn(k, F.col(k) + F.lit(i * strides[k]))
+                    if "ts" in df.columns:
+                        # nudge each copy by i µs: same bucket densities, no
+                        # duplicate (series, ts) collisions across copies
+                        c = c.withColumn(
+                            "ts", F.timestamp_micros(F.unix_micros("ts") + F.lit(i))
+                        )
+                    copies.append(c)
+                df = copies[0]
+                for c in copies[1:]:
+                    df = df.unionByName(c)
+            _write_table(df, out, t)
+
+    # v2: ts written as TIMESTAMP_NTZ
+    return _layout(os.path.basename(layout_dir(mult)), TABLES, write)
 
 
 HOT_MULT = 500  # flash-crowd multiplier for the j13 skew layout
@@ -500,43 +519,25 @@ def build_skewed(spark, hot_mult: int) -> str:
     event_ids stride-shifted, ts µs-nudged so no duplicate keys), every
     other hour stays 1×. Non-event tables symlink to the base sf0.1
     files. Returns the layout dir."""
-    out = os.path.join("/tmp", "dws_stress", f"skew{hot_mult}v2")
-    marker = os.path.join(out, "_built")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        if t == "events":
-            continue
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(BASE_SF, f"{t}.parquet"), dst)
-    e = normalize_ts(load(spark, BASE_SF, "events"))
-    hot_hour = (
-        e.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .count()
-        .orderBy(F.desc("count"), "h")
-        .first()["h"]
-    )
-    stride = e.agg(F.max("event_id")).collect()[0][0] + 1
-    extra = (
-        e.filter(F.date_trunc("hour", "ts") == F.lit(hot_hour))
-        .withColumn("i", F.explode(F.sequence(F.lit(1), F.lit(hot_mult - 1))))
-        .withColumn("event_id", F.col("event_id") + F.col("i") * F.lit(stride))
-        .withColumn("ts", F.timestamp_micros(F.unix_micros("ts") + F.col("i")))
-        .drop("i")
-    )
-    # NTZ write, same rationale as build_scaled
-    df = e.unionByName(extra).withColumn(
-        "ts",
-        F.expr(
-            "timestampadd(MICROSECOND, unix_micros(ts),"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-        ),
-    )
-    df.write.mode("overwrite").parquet(os.path.join(out, "events.parquet"))
-    open(marker, "w").write("ok")
-    return out
+    def write(out: str) -> None:
+        e = normalize_ts(load(spark, BASE_SF, "events"))
+        hot_hour = (
+            e.groupBy(F.date_trunc("hour", "ts").alias("h"))
+            .count()
+            .orderBy(F.desc("count"), "h")
+            .first()["h"]
+        )
+        stride = e.agg(F.max("event_id")).collect()[0][0] + 1
+        extra = (
+            e.filter(F.date_trunc("hour", "ts") == F.lit(hot_hour))
+            .withColumn("i", F.explode(F.sequence(F.lit(1), F.lit(hot_mult - 1))))
+            .withColumn("event_id", F.col("event_id") + F.col("i") * F.lit(stride))
+            .withColumn("ts", F.timestamp_micros(F.unix_micros("ts") + F.col("i")))
+            .drop("i")
+        )
+        _write_table(e.unionByName(extra), out, "events")
+
+    return _layout(f"skew{hot_mult}v2", ("events",), write)
 
 
 def _bucket_pair_work(spark, sf_dir: str) -> int:
@@ -555,20 +556,23 @@ def _bucket_pair_work(spark, sf_dir: str) -> int:
     ).collect()[0]["w"]
 
 
-def _median_time(q, spark, sf_dir: str, repeats: int = 3) -> tuple[float, int]:
-    """(median seconds over ``repeats`` post-warm passes, row count).
+def _median_time(q, spark, sf_dir: str, repeats: int = 3) -> float:
+    """Median seconds over ``repeats`` timed passes after a warm one."""
+    timed_pass(spark, q.fn, sf_dir)  # warm: JIT, footers, plan compilation
+    ts = sorted(timed_pass(spark, q.fn, sf_dir) for _ in range(repeats))
+    return ts[len(ts) // 2]
 
-    Every timed pass starts from a released dedup index (outside the
-    timer), so a dedup query pays for its own build instead of scanning
-    the pairs the warm pass cached."""
-    rows = q.fn(spark, sf_dir).count()  # warm
-    ts = []
-    for _ in range(repeats):
-        release_caches()
-        t0 = time.perf_counter()
-        q.fn(spark, sf_dir).count()
-        ts.append(time.perf_counter() - t0)
-    return sorted(ts)[len(ts) // 2], rows
+
+def _verdicts(
+    label: str, q, sf_dir: str, *frames: pd.DataFrame
+) -> tuple[list[str], pd.DataFrame]:
+    """Run ``q.oracle`` in DuckDB once on the files at ``sf_dir`` and
+    hash-compare each Spark frame against it: (one "ok"/"FAIL" per frame,
+    the DuckDB frame)."""
+    con = connect(sf_dir)
+    duck = con.execute(q.oracle).fetchdf()
+    con.close()
+    return ["ok" if compare_frames(label, pdf, duck) else "FAIL" for pdf in frames], duck
 
 
 def skew_stress(spark, qs) -> list[str]:
@@ -579,20 +583,16 @@ def skew_stress(spark, qs) -> list[str]:
     q = qs["j13_interval_bucket_join"]
     base_n = normalize_ts(load(spark, BASE_SF, "events")).count()
     work_base = _bucket_pair_work(spark, BASE_SF)
-    t_base, rows_base = _median_time(q, spark, BASE_SF)
+    t_base = _median_time(q, spark, BASE_SF)
+    rows_base = q.fn(spark, BASE_SF).count()
 
     sdir = build_skewed(spark, HOT_MULT)
     n_total = normalize_ts(load(spark, sdir, "events")).count()
     work_skew = _bucket_pair_work(spark, sdir)
-    t_skew, _ = _median_time(q, spark, sdir)
-    con = connect(sdir)
-    # rows_skew from the SAME materialization the oracle compares — the
-    # query already ran 4× in _median_time, no fifth/sixth execution
+    t_skew = _median_time(q, spark, sdir)
     skew_pdf = q.fn(spark, sdir).toPandas()
     rows_skew = len(skew_pdf)
-    ok = compare_frames("j13_skew", skew_pdf, con.execute(q.oracle).fetchdf())
-    con.close()
-    verdict = "ok" if ok else "FAIL"
+    (verdict,), _ = _verdicts("j13_skew", q, sdir, skew_pdf)
     growth = n_total / base_n
     work_ratio = work_skew / work_base
     ratio = t_skew / t_base if t_base else float("inf")
@@ -640,64 +640,25 @@ def build_part_scaled(spark, mult: int) -> str:
     copy-0's 2500, so depth grows ⌈log₈(M·N)⌉ and every level's working
     set fans out 8× — the recursion actually deepens with data, which is
     the claim under test."""
-    out = os.path.join("/tmp", "dws_stress", f"part{mult}v1")
-    marker = os.path.join(out, "_built")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        if t == "part":
-            continue
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(BASE_SF, f"{t}.parquet"), dst)
-    p = load(spark, BASE_SF, "part")
-    stride = p.agg(F.max("p_partkey")).collect()[0][0] + 1
-    copies = [
-        p.withColumn("p_partkey", F.col("p_partkey") + F.lit(i * stride))
-        for i in range(mult)
-    ]
-    df = copies[0]
-    for c in copies[1:]:
-        df = df.unionByName(c)
-    df.write.mode("overwrite").parquet(os.path.join(out, "part.parquet"))
-    open(marker, "w").write("ok")
-    return out
+    def write(out: str) -> None:
+        p = load(spark, BASE_SF, "part")
+        stride = p.agg(F.max("p_partkey")).collect()[0][0] + 1
+        df = p
+        for i in range(1, mult):
+            df = df.unionByName(
+                p.withColumn("p_partkey", F.col("p_partkey") + F.lit(i * stride))
+            )
+        _write_table(df, out, "part")
+
+    return _layout(f"part{mult}v1", ("part",), write)
 
 
-def hierarchy_stress(spark, qs, mults: list[int]) -> list[str]:
-    """Measure sql4's data-dependent recursion as the part hierarchy
-    deepens: time, closure size, and MAX RECURSION DEPTH at 1× and each
-    multiplier, oracle-verified on the same scaled files. The depth
-    column growing with M is the direct evidence the recursion is bounded
-    by data, not by a fixed unroll."""
-    q = qs["sql4_transitive_closure"]
-    rows = []
-    t_base = None
-    for m in [1, *mults]:
-        sf_dir = BASE_SF if m == 1 else build_part_scaled(spark, m)
-        t, _ = _median_time(q, spark, sf_dir)
-        pdf = q.fn(spark, sf_dir).toPandas()
-        con = connect(sf_dir)
-        ok = compare_frames("sql4_hier", pdf, con.execute(q.oracle).fetchdf())
-        con.close()
-        n_parts = int(pdf["n_parts"].sum())
-        depth = int(pdf["depth"].max())
-        t_base = t_base if t_base is not None else t
-        verdict = "ok" if ok else "FAIL"
-        rows.append(
-            f"| {m}× | {n_parts} | {depth} | {len(pdf)} | {t:.2f} "
-            f"| {t / t_base:.1f} | {verdict} |"
-        )
-        print(
-            f"  sql4 {m}×: {t:.2f}s depth {depth} closure {n_parts} "
-            f"oracle {verdict}",
-            flush=True,
-        )
-    return [
-        "",
+# sql4 and sql5 recurse over PART, a dimension the shared scaled layout
+# keeps 1× by design, so each gets its own section on the part-scaled
+# layouts: (heading, prose, {output column summed per layout: its header}).
+RECURSION = {
+    "sql4_transitive_closure": (
         "## Recursion stress — sql4 on a deepening part hierarchy",
-        "",
         "sql4's recursion walks the PART table — a dimension the shared "
         "scaled layout keeps 1× by design — so this section replicates "
         "part alone (contiguous shifted keys, other tables symlinked): "
@@ -708,49 +669,10 @@ def hierarchy_stress(spark, qs, mults: list[int]) -> list[str]:
         "should track the closure size (each node enters the working set "
         "exactly once). Oracle = DuckDB `WITH RECURSIVE` on the same "
         "scaled files, full hash-compare.",
-        "",
-        "| layout | closure rows (nodes) | max depth | output rows | "
-        "sql4 s (median) | time ratio | oracle |",
-        "| --- | --- | --- | --- | --- | --- | --- |",
-        *rows,
-    ]
-
-
-def dag_stress(spark, qs, mults: list[int]) -> list[str]:
-    """sql5's DAG-closure analogue of hierarchy_stress: same part-scaled
-    layouts, but the claim under test is the per-level DISTINCT — depth
-    grows with the data like sql4's, per-depth node counts equal the
-    base-8 digit-count population (each node visited ONCE despite the
-    converging A/B edge paths), and n_converging > 0 proves the diamonds
-    are real at every scale."""
-    q = qs["sql5_dag_closure"]
-    rows = []
-    t_base = None
-    for m in [1, *mults]:
-        sf_dir = BASE_SF if m == 1 else build_part_scaled(spark, m)
-        t, _ = _median_time(q, spark, sf_dir)
-        pdf = q.fn(spark, sf_dir).toPandas()
-        con = connect(sf_dir)
-        ok = compare_frames("sql5_dag", pdf, con.execute(q.oracle).fetchdf())
-        con.close()
-        n_nodes = int(pdf["n_nodes"].sum())
-        n_conv = int(pdf["n_converging"].sum())
-        depth = int(pdf["depth"].max())
-        t_base = t_base if t_base is not None else t
-        verdict = "ok" if ok else "FAIL"
-        rows.append(
-            f"| {m}× | {n_nodes} | {n_conv} | {depth} | {len(pdf)} | {t:.2f} "
-            f"| {t / t_base:.1f} | {verdict} |"
-        )
-        print(
-            f"  sql5 {m}×: {t:.2f}s depth {depth} nodes {n_nodes} "
-            f"converging {n_conv} oracle {verdict}",
-            flush=True,
-        )
-    return [
-        "",
+        {"n_parts": "closure rows (nodes)"},
+    ),
+    "sql5_dag_closure": (
         "## Recursion stress — sql5 DAG closure on a deepening part graph",
-        "",
         "sql5 walks the same part-scaled layouts as sql4 but over a graded "
         "DAG (two base-8 digit-drop edge rules: every key ≥ 64 has TWO "
         "parents, and A∘A / B∘A paths converge on the same grandparent). "
@@ -762,12 +684,40 @@ def dag_stress(spark, qs, mults: list[int]) -> list[str]:
         "scale), and max depth grows ⌈log₈(M·20k)⌉ with the data. Oracle "
         "= DuckDB `WITH RECURSIVE` on the same scaled files, full "
         "hash-compare.",
-        "",
-        "| layout | closure nodes | converging nodes | max depth | "
-        "output rows | sql5 s (median) | time ratio | oracle |",
-        "| --- | --- | --- | --- | --- | --- | --- | --- |",
-        *rows,
-    ]
+        {"n_nodes": "closure nodes", "n_converging": "converging nodes"},
+    ),
+}
+
+
+def recursion_stress(spark, qs, mults: list[int], name: str) -> list[str]:
+    """Measure one RECURSION query as the part hierarchy deepens: time,
+    the summed closure columns, and MAX RECURSION DEPTH at 1× and each
+    multiplier, oracle-verified on the same scaled files. The depth
+    column growing with M is the direct evidence the recursion is bounded
+    by data, not by a fixed unroll."""
+    heading, prose, sums = RECURSION[name]
+    q = qs[name]
+    short = name.split("_")[0]
+    rows = []
+    t_base = None
+    for m in [1, *mults]:
+        sf_dir = BASE_SF if m == 1 else build_part_scaled(spark, m)
+        t = _median_time(q, spark, sf_dir)
+        pdf = q.fn(spark, sf_dir).toPandas()
+        (verdict,), _ = _verdicts(short, q, sf_dir, pdf)
+        totals = [str(int(pdf[c].sum())) for c in sums]
+        depth = int(pdf["depth"].max())
+        t_base = t_base if t_base is not None else t
+        cells = [f"{m}×", *totals, str(depth), str(len(pdf)), f"{t:.2f}",
+                 f"{t / t_base:.1f}", verdict]
+        rows.append("| " + " | ".join(cells) + " |")
+        closure = " ".join(f"{c} {v}" for c, v in zip(sums, totals))
+        print(f"  {short} {m}×: {t:.2f}s depth {depth} {closure} oracle {verdict}",
+              flush=True)
+    header = ["layout", *sums.values(), "max depth", "output rows",
+              f"{short} s (median)", "time ratio", "oracle"]
+    return ["", heading, "", prose, "",
+            "| " + " | ".join(header) + " |", "|" + " --- |" * len(header), *rows]
 
 
 # Hot-cell fixture for the SemDeDup skew claim: base corpus + HOTCELL_COPIES
@@ -794,17 +744,10 @@ def build_hotcell() -> str:
     Built driver-side in numpy (10k × 64 — a fixture, not a pipeline):
     deterministic, no RNG — each hot vector is an exact arithmetic remix
     of a base vector and base vector 0."""
-    out = os.path.join("/tmp", "dws_stress", "hotcellv2")
-    marker = os.path.join(out, "_built")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t in TABLES:
-        if t == "embeddings":
-            continue
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            os.symlink(os.path.join(BASE_SF, f"{t}.parquet"), dst)
+    return _layout("hotcellv2", ("embeddings",), _write_hotcell)
+
+
+def _write_hotcell(out: str) -> None:
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -844,8 +787,6 @@ def build_hotcell() -> str:
         }
     )
     pq.write_table(table, os.path.join(out, "embeddings.parquet"))
-    open(marker, "w").write("ok")
-    return out
 
 
 def _cell_pair_work(spark, sf_dir: str) -> tuple[int, int]:
@@ -867,24 +808,19 @@ def semdedup_skew_stress(spark, qs) -> list[str]:
     q48 = qs["l48_semdedup_salted"]
     q52 = qs["l52_semdedup_adaptive"]
     work_base, max_base = _cell_pair_work(spark, BASE_SF)
-    t41_base, rows_base = _median_time(q41, spark, BASE_SF)
-    t48_base, _ = _median_time(q48, spark, BASE_SF)
-    t52_base, _ = _median_time(q52, spark, BASE_SF)
+    t41_base = _median_time(q41, spark, BASE_SF)
+    t48_base = _median_time(q48, spark, BASE_SF)
+    t52_base = _median_time(q52, spark, BASE_SF)
+    rows_base = q41.fn(spark, BASE_SF).count()
 
     sdir = build_hotcell()
     work_hot, max_hot = _cell_pair_work(spark, sdir)
-    t41_hot, rows41 = _median_time(q41, spark, sdir)
-    t48_hot, rows48 = _median_time(q48, spark, sdir)
-    t52_hot, rows52 = _median_time(q52, spark, sdir)
-    con = connect(sdir)
-    duck = con.execute(q41.oracle).fetchdf()
-    con.close()
-    ok41 = compare_frames("l41_hotcell", q41.fn(spark, sdir).toPandas(), duck)
-    ok48 = compare_frames("l48_hotcell", q48.fn(spark, sdir).toPandas(), duck)
-    ok52 = compare_frames("l52_hotcell", q52.fn(spark, sdir).toPandas(), duck)
-    v41 = "ok" if ok41 else "FAIL"
-    v48 = "ok" if ok48 else "FAIL"
-    v52 = "ok" if ok52 else "FAIL"
+    t41_hot = _median_time(q41, spark, sdir)
+    t48_hot = _median_time(q48, spark, sdir)
+    t52_hot = _median_time(q52, spark, sdir)
+    pdfs = [q.fn(spark, sdir).toPandas() for q in (q41, q48, q52)]
+    rows48 = len(pdfs[1])
+    (v41, v48, v52), _ = _verdicts("semdedup_hotcell", q41, sdir, *pdfs)
     work_ratio = work_hot / work_base
     r41 = t41_hot / t41_base if t41_base else float("inf")
     r48 = t48_hot / t48_base if t48_base else float("inf")
@@ -934,41 +870,35 @@ def semdedup_skew_stress(spark, qs) -> list[str]:
         f"serialized straggler — while l48's grew {r48:.1f}× "
         f"(split speedup {speedup:.1f}× on the hot layout), with both "
         "outputs hash-identical to the oracle on the same files. On the "
-        "BALANCED layout the split buys nothing and costs its window + "
-        "replication overhead — which is why l41 keeps one block per "
-        "cell, l48 splits every cell as the opt-in, and l52 (round 12) "
-        "routes PER CELL: on the hot layout it must track l48's wall (the "
-        "hot cell crosses the threshold and splits) while cool cells keep "
-        "the one-block zero-replication path — the number to check is "
-        "the l52 column sitting at ~the l48 one on the hot "
-        "layout and between the two on the balanced one.",
+        "BALANCED layout the split buys nothing and costs its per-cell "
+        "count (a broadcast aggregate, no window) + replication "
+        "overhead — which is why l41 keeps one block per cell, l48 "
+        "splits every cell as the opt-in, and l52 (round 12) routes PER "
+        "CELL: on the hot layout it must track l48's wall (the hot cell "
+        "crosses the threshold and splits) while cool cells keep the "
+        "one-block zero-replication path — the number to check is the l52 "
+        "column sitting at ~the l48 one on the hot layout and between the "
+        "two on the balanced one.",
     ]
 
 
 def run_at(spark, qs, sf_dir: str, mult: int | None):
     """Time every stress query at ``sf_dir`` (one warm + one timed pass,
-    the timed one from a released dedup index); hash-compare against
-    DuckDB on the same files at scaled multipliers, up to each query's
+    rows from one untimed ``.count()``); hash-compare against DuckDB on
+    the same files at scaled multipliers, up to each query's
     ORACLE_MAX_MULT ceiling."""
     out = {}
     for name in QUERIES:
         q = qs[name]
-        q.fn(spark, sf_dir).count()
-        release_caches()
-        t0 = time.perf_counter()
+        dt = _median_time(q, spark, sf_dir, repeats=1)
         n = q.fn(spark, sf_dir).count()
-        dt = time.perf_counter() - t0
         verdict = "—"
         check_oracle = mult is not None and mult <= ORACLE_MAX_MULT.get(
             name, float("inf")
         )
         if check_oracle and q.oracle:
-            con = connect(sf_dir)
-            duck = con.execute(q.oracle).fetchdf()
-            con.close()
-            ok = compare_frames(name, q.fn(spark, sf_dir).toPandas(), duck)
-            verdict = "ok" if ok else "FAIL"
-            if ok and name in ANALYTIC:
+            (verdict,), duck = _verdicts(name, q, sf_dir, q.fn(spark, sf_dir).toPandas())
+            if verdict == "ok" and name in ANALYTIC:
                 # Anchor the replication model (VERDICT r08 task 5): at
                 # every multiplier where the direct DuckDB oracle still
                 # runs, the analytic expectation must reproduce that
@@ -1021,7 +951,6 @@ def main() -> None:
         print(f"at {m}x:", flush=True)
         results[m] = run_at(spark, qs, scaled, mult=m)
 
-    release_caches()
     big = mults[-1]
     header = (
         ["query", "1× s"]
@@ -1096,10 +1025,9 @@ def main() -> None:
     out += skew_stress(spark, qs)
     print("semdedup skew stress (l41/l48):", flush=True)
     out += semdedup_skew_stress(spark, qs)
-    print("hierarchy stress (sql4):", flush=True)
-    out += hierarchy_stress(spark, qs, mults)
-    print("dag stress (sql5):", flush=True)
-    out += dag_stress(spark, qs, mults)
+    for name in RECURSION:
+        print(f"recursion stress ({name}):", flush=True)
+        out += recursion_stress(spark, qs, mults, name)
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "STRESS.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")

@@ -228,13 +228,21 @@ def test_kernel_stages_pin_their_exchange_width(spark, qs, sf_dir, name):
 
 @pytest.mark.parametrize(
     "name,exchanges",
-    [("l41_semdedup_pairs", 2), ("l41_semdedup_materialize", 6)],
+    [
+        ("l41_semdedup_pairs", 2),
+        ("l41_semdedup_materialize", 6),
+        ("l48_semdedup_salted", 4),
+        ("l52_semdedup_adaptive", 4),
+    ],
 )
 def test_one_block_routing_builds_no_window(spark, qs, sf_dir, name, exchanges):
-    """With no hot threshold the pair kernel groups by cid alone: no
-    count() window over the cells and no extra shuffle. Pins the sf0.01
-    plan's shuffle-Exchange mentions (node tree plus node details,
-    broadcasts excluded) at their measured values."""
+    """No routing sorts a cell through a window. With no hot threshold
+    (l41) the pair kernel groups by cid alone, with no extra shuffle; with
+    one (l48, l52) the cell sizes come from a partial-aggregated
+    ``groupBy("cid").count()`` broadcast back on cid, so a hot cell is
+    counted across tasks. Pins the sf0.01 plan's shuffle-Exchange
+    mentions (node tree plus node details, broadcasts excluded) at their
+    measured values."""
     import os
     import re
 
