@@ -339,9 +339,9 @@ def lsh_candidates(sigs: DataFrame) -> DataFrame:
 # release_caches() is the single release point and unpersists every stage.
 # Whoever re-runs queries against the same files and wants each run to pay
 # for its own build must call it before each run, outside any timer
-# (bench.py, scripts/stress.py, scripts/corescale.py and the perfbench
-# workloads do, between passes); a long-lived session calls it when it is
-# done with dedup. The index never notices a rewritten input file — release
+# (observe.timed_pass does, for bench.py, scripts/stress.py and
+# scripts/corescale.py; the perfbench workloads call it between passes);
+# a long-lived session calls it when it is done with dedup. The index never notices a rewritten input file — release
 # it after rewriting one.
 
 

@@ -25,16 +25,12 @@ repo on PYTHONPATH.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark.registry import query
-
-# Path of the most recent s11 sink run in this process (per-run unique
-# directories make concurrent runs race-free; tests locate theirs here).
-LAST_SINK_DIR: str | None = None
+from datums_warehouse_spark.sources.tables import events_us, scratch
 
 
 @query(
@@ -387,19 +383,8 @@ def s11_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    from datums_warehouse_spark.sources.tables import events_us
-
-    # Per-run unique directory: two concurrent sessions grading the same
-    # scale factor must not race on one path (ADVICE r06 — the old fixed
-    # dir + rmtree deleted a sibling run's parts mid-write). The module
-    # global LAST_SINK_DIR lets tests find the run they just triggered.
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "dws_pysink", f"{tag}-{uuid.uuid4().hex[:12]}"
-    )
-    os.makedirs(out_dir, exist_ok=False)
-    global LAST_SINK_DIR
-    LAST_SINK_DIR = out_dir
+    out_dir = scratch("s11_python_datasink", sf_dir)
+    os.makedirs(out_dir)
 
     class _PartCommit(WriterCommitMessage):
         def __init__(self, filename: str, n_rows: int):

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,17 +21,7 @@ from pyspark.sql import functions as F
 from datums_warehouse_spark.functions.determinism import dsum, sql_dsum
 from datums_warehouse_spark.operators.candles import candles
 from datums_warehouse_spark.registry import query
-from datums_warehouse_spark.sources.tables import events_us, load
-
-_SINK_ROOT = os.path.join(tempfile.gettempdir(), "dws_sinks")
-
-
-def _sink_dir(name: str, sf_dir: str) -> str:
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    path = os.path.join(_SINK_ROOT, tag, name)
-    shutil.rmtree(path, ignore_errors=True)
-    return path
-
+from datums_warehouse_spark.sources.tables import events_us, load, scratch
 
 _SQL_EVENT_AGG = f"""
     SELECT event_type, count(*) AS n, {sql_dsum("value")} AS total_value
@@ -52,7 +41,7 @@ def s2_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned parquet round-trip: write events partitioned by
     event_type (the reference's series-per-directory layout, columnar),
     read back, aggregate. Partition values survive as scan columns."""
-    out = _sink_dir("s2_partitioned", sf_dir)
+    out = scratch("s2_partitioned", sf_dir)
     events_us(spark, sf_dir).write.partitionBy("event_type").parquet(out)
     return _event_agg(spark.read.parquet(out))
 
@@ -62,7 +51,7 @@ def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip with explicit schema — the reference's native storage
     format [R]. Doubles survive exactly (shortest-round-trip rendering);
     the timestamp is carried as epoch micros to dodge format parsing."""
-    out = _sink_dir("s3_csv", sf_dir)
+    out = scratch("s3_csv", sf_dir)
     e = events_us(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts")).drop("ts")
     e.write.option("header", True).csv(out)
     back = (
@@ -77,7 +66,7 @@ def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s4_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines round-trip — the reference ingests exchange API responses
     as JSON [R]. Schema pinned on read (inference is a scan at scale)."""
-    out = _sink_dir("s4_jsonl", sf_dir)
+    out = scratch("s4_jsonl", sf_dir)
     e = events_us(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts")).drop("ts")
     e.write.json(out)
     back = spark.read.schema(
@@ -163,27 +152,19 @@ def s2_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-located-join layout for repeated fact⋈fact joins at 100 TB
     (SURVEY.md §4; pre-shuffle once at write time, join free forever).
     Graded on the join result via the original tables."""
-    tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    wh = os.path.join(tempfile.gettempdir(), "dws_warehouse", tag)
-    o_tbl, li_tbl = f"dws_orders_{tag}", f"dws_lineitem_{tag}"
     try:
-        for tbl, name, key in (
-            (o_tbl, "orders", "o_orderkey"),
-            (li_tbl, "lineitem", "l_orderkey"),
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            path = os.path.join(wh, tbl)
-            shutil.rmtree(path, ignore_errors=True)
+        for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+            spark.sql(f"DROP TABLE IF EXISTS dws_{name}")
             (
                 load(spark, sf_dir, name)
                 .write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", path)  # external table: no warehouse-dir dependency
+                # external table: no warehouse-dir dependency
+                .option("path", scratch(f"s2_bucketed_{name}", sf_dir))
                 .format("parquet")
-                .saveAsTable(tbl)
+                .saveAsTable(f"dws_{name}")
             )
-        o = spark.table(o_tbl)
-        li = spark.table(li_tbl)
+        o, li = spark.table("dws_orders"), spark.table("dws_lineitem")
     except Exception:
         # catalog unavailable (e.g. unwritable cwd blocks the default
         # spark-warehouse mkdir) — same query, plain scans; result identical
@@ -228,7 +209,7 @@ def s7_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ per file, reconciled at planning time; writing the union back
     (compaction) retires the schema debt.
     """
-    out = _sink_dir("s7_evolution", sf_dir)
+    out = scratch("s7_evolution", sf_dir)
     e = events_us(spark, sf_dir).select("event_id", "event_type", "value")
     e.filter(F.col("event_id") % 2 == 0).drop("event_id").write.parquet(
         os.path.join(out, "b1")
@@ -276,24 +257,17 @@ def s8_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches new data, and the candle read prunes to requested series —
     O(new data) per cycle, never O(warehouse).
     """
-    import uuid
-
     from datums_warehouse_spark.warehouse import Warehouse
 
     feed = events_us(spark, sf_dir).select(
         "event_id", "ts", F.col("event_type").alias("series"), "value"
     )
-    root = _sink_dir(f"s8_{uuid.uuid4().hex[:8]}", sf_dir)
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, scratch("s8_incremental", sf_dir))
     # bootstrap: everything before a fixed date (the data spans ~150 days
     # from 2024-01-01 at every SF, so the boundary splits it at any scale)
     wh.ingest(feed.filter(F.col("ts") < F.lit("2024-04-01").cast("timestamp")))
     wh.update_incremental(feed)  # full feed: only unseen rows append
-    bars = candles(
-        wh.table().withColumnRenamed("series", "event_type"), "hour"
-    ).localCheckpoint(eager=True)  # materialize before the store is cleaned
-    shutil.rmtree(root, ignore_errors=True)
-    return bars
+    return candles(wh.table().withColumnRenamed("series", "event_type"), "hour")
 
 
 RETENTION_DAYS = 14  # keep the trailing N days, relative to the newest event
@@ -341,7 +315,7 @@ def s9_retention_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # naive wall clock, so the derived day IS the naive calendar day.
     epoch_day = F.expr("CAST(unix_micros(ts) div 86400000000 AS INT)")
     e = events_us(spark, sf_dir).withColumn("day", F.date_from_unix_date(epoch_day))
-    path = _sink_dir("s9_retention", sf_dir)
+    path = scratch("s9_retention", sf_dir)
     e.write.mode("overwrite").partitionBy("day").parquet(path)
     max_day = e.agg(F.max("day")).collect()[0][0]
     cutoff = max_day - _dt.timedelta(days=RETENTION_DAYS - 1)
@@ -382,15 +356,15 @@ def s12_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB compaction runs per partition-directory (day/series), not
     whole-table: each directory's debris is a few GB, so the range
     shuffle is partition-local and incremental — same plan, bounded
-    input. tests/test_compaction.py asserts the physical claims the
-    oracle can't see: file count shrinks FRAGMENT→COMPACT and per-file
-    ts ranges are pairwise disjoint (footer-prunable).
+    input. tests/test_round7_ops.py::TestCompaction asserts the physical
+    claims the oracle can't see: file count shrinks FRAGMENT→COMPACT and
+    per-file ts ranges are pairwise disjoint (footer-prunable).
     """
     from datums_warehouse_spark.session import scoped_conf
 
-    frag = _sink_dir("s12_fragmented", sf_dir)
+    frag = scratch("s12_fragmented", sf_dir)
     events_us(spark, sf_dir).repartition(FRAGMENT_FILES, "event_id").write.parquet(frag)
-    compacted = _sink_dir("s12_compacted", sf_dir)
+    compacted = scratch("s12_compacted", sf_dir)
     # INT96 (Spark's default parquet timestamp encoding) carries NO footer
     # statistics, which would silently void the min/max-pruning payoff the
     # compaction exists for — write micros, which are stats-bearing.
@@ -437,7 +411,7 @@ def s13_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    out = _sink_dir("s13_vacuum", sf_dir)
+    out = scratch("s13_vacuum", sf_dir)
     events_us(spark, sf_dir).repartition(8, "event_id").write.parquet(out)
     committed = {f for f in os.listdir(out) if f.endswith(".parquet")}
     with open(os.path.join(out, "_MANIFEST"), "w") as fh:
@@ -575,7 +549,7 @@ def s15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a catalog).
     """
     e = events_us(spark, sf_dir).select("event_id", "user_id", "value", "event_type")
-    out = _sink_dir("s15_schema_evolution", sf_dir)
+    out = scratch("s15_schema_evolution", sf_dir)
     v1, v2 = os.path.join(out, "v1"), os.path.join(out, "v2")
     e.filter(F.col("event_id") % 2 == 0).drop("event_type").write.parquet(v1)
     e.filter(F.col("event_id") % 2 == 1).write.parquet(v2)
@@ -690,7 +664,7 @@ def s17_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from datums_warehouse_spark.session import scoped_conf
 
-    out = _sink_dir("s17_dynamic_overwrite", sf_dir)
+    out = scratch("s17_dynamic_overwrite", sf_dir)
     e = events_us(spark, sf_dir).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "value"
     )
@@ -752,7 +726,7 @@ def s18_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a catalog/metastore and carries per-file column stats for pruning —
     same contract, indexed.
     """
-    out = _sink_dir("s18_time_travel", sf_dir)
+    out = scratch("s18_time_travel", sf_dir)
     e = events_us(spark, sf_dir).select("event_id", "event_type", "value")
     v1_dir, v2_dir = os.path.join(out, "c1"), os.path.join(out, "c2")
     e.filter(F.col("event_id") % 2 == 0).write.parquet(v1_dir)
@@ -800,7 +774,7 @@ def s19_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC predicate pushdown and column pruning work like parquet's, so the
     read-side plan is identical to s1's (the aggregate reads only
     event_type/value)."""
-    out = _sink_dir("s19_orc", sf_dir)
+    out = scratch("s19_orc", sf_dir)
     e = events_us(spark, sf_dir).withColumn("ts_us", F.unix_micros("ts")).drop("ts")
     e.write.orc(out)
     back = spark.read.schema(

@@ -8,6 +8,9 @@ and the vectorized reader for free.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -28,6 +31,35 @@ TABLES = (
 
 def path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_path(name: str, sf_dir: str) -> str:
+    """Where the writer query ``name`` keeps its files for ``sf_dir`` in
+    this process: ``<root>/<sf tag>/<name>``, the sf tag being the last
+    component of ``sf_dir``. The root is private to the process (made on
+    first use, removed at exit), so two processes running the same query
+    never touch each other's files and no run leaves any behind. Looking
+    the path up changes nothing under it; writers call :func:`scratch`."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import tempfile
+
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="dws-")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return os.path.join(_SCRATCH_ROOT, os.path.basename(sf_dir.rstrip("/")), name)
+
+
+def scratch(name: str, sf_dir: str) -> str:
+    """:func:`scratch_path`, emptied: the path does not exist on return,
+    so a writer's default error-if-exists mode applies. A process that
+    runs a writer query 100× holds one copy of its output."""
+    out = scratch_path(name, sf_dir)
+    shutil.rmtree(out, ignore_errors=True)
+    return out
 
 
 # Schema per (session, sf_dir, table): schema inference reads parquet

@@ -31,16 +31,23 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from datums_warehouse_spark.functions.determinism import DEC, dsum, sql_dsum
 from datums_warehouse_spark.registry import query
 from datums_warehouse_spark.session import scoped_shuffle_partitions
-from datums_warehouse_spark.sources.tables import events_us, load, normalize_ts
+from datums_warehouse_spark.sources.tables import (
+    events_us,
+    load,
+    normalize_ts,
+    scratch,
+    scratch_path,
+)
 
 
 @query(
@@ -162,15 +169,6 @@ def t6_first_threshold_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- genuine streaming runs (rows-only) --------------------------------------
 
 
-def _await(q, timeout: int = 120) -> None:
-    """awaitTermination with an explicit failure instead of a silent
-    truncated result: a query still running after `timeout` seconds means
-    the availableNow trigger never drained — stop it and raise."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise RuntimeError(f"streaming query did not finish within {timeout}s")
-
-
 def _assert_single_data_batch(q) -> None:
     """Pin the assumption the stream-stream-join oracles (t8/t14) rest on:
     availableNow drained the staged source in ONE data microbatch (no
@@ -188,12 +186,38 @@ def _assert_single_data_batch(q) -> None:
         )
 
 
-# Streaming queries materialize one state-store instance per shuffle
-# partition, sized at FIRST start and pinned by the checkpoint — these
-# test-scale runs use fresh checkpoints, so the scoped clamp is safe and
-# cuts per-batch state overhead ~25× under a default (200-partition)
-# session. On a real cluster you'd size this to the state volume.
-_few_state_partitions = scoped_shuffle_partitions
+def _drain(
+    stream: DataFrame,
+    mode: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter] | None = None,
+    single_batch: bool = False,
+) -> DataFrame | None:
+    """Run ``stream`` to the end of its input with an ``availableNow``
+    trigger, in ``mode``. Without ``sink`` the rows land in a memory table,
+    returned as a frame; ``sink`` configures any other writer (format,
+    path, checkpoint) and nothing is returned. ``single_batch`` applies
+    :func:`_assert_single_data_batch` to the finished query.
+
+    Streaming queries materialize one state-store instance per shuffle
+    partition, sized at FIRST start and pinned by the checkpoint — these
+    test-scale runs use fresh checkpoints, so the scoped clamp is safe and
+    cuts per-batch state overhead ~25× under a default (200-partition)
+    session. On a real cluster you'd size this to the state volume.
+
+    A query still running after two minutes means the trigger never
+    drained: it is stopped and raises, instead of returning a silently
+    truncated result."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    writer = stream.writeStream.outputMode(mode)
+    writer = sink(writer) if sink else writer.format("memory").queryName(name)
+    with scoped_shuffle_partitions(stream.sparkSession):
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(120):
+            q.stop()
+            raise RuntimeError("streaming query did not finish within 120s")
+    if single_batch:
+        _assert_single_data_batch(q)
+    return None if sink else stream.sparkSession.table(name)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,19 +227,13 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     # The file-stream source requires a directory of files (it tails the
     # dir for new arrivals); the read-only testdata is one file per table,
-    # so stage a copy into a temp dir — exactly how a landing zone works.
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    land = os.path.join(tempfile.gettempdir(), "dws_stream_src", tag)
-    os.makedirs(land, exist_ok=True)
+    # so stage a copy once per process into a scratch directory — exactly
+    # how a landing zone works.
+    land = scratch_path("stream_src", sf_dir)
     src = f"{sf_dir}/events.parquet"
     done = os.path.join(land, "_staged")  # leading _ → invisible to the source
     if not os.path.exists(done):
-        # wipe any pre-marker or partially-staged debris first: stale part
-        # files would be served ALONGSIDE the fresh copies (the source
-        # reads every .parquet in the dir) — silent duplicate rows
-        for f in os.listdir(land):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(land, f))
+        os.makedirs(scratch("stream_src", sf_dir))
         if os.path.isdir(src):
             # multi-part dataset (e.g. the stress harness's scaled
             # warehouses): stage the part files FLAT into the landing dir
@@ -261,7 +279,6 @@ def t4_watermark_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     time are finalized and evicted — the knob that keeps 100 TB streams at
     O(active windows) state, not O(history).
     """
-    name = f"t4_wm_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "2 hours")
@@ -269,12 +286,7 @@ def t4_watermark_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select("series", F.col("w.start").alias("bucket"), "n")
     )
-    with _few_state_partitions(spark):
-        q = agg.writeStream.format("memory").queryName(name).outputMode("append").trigger(
-            availableNow=True
-        ).start()
-        _await(q)
-    return spark.table(name)
+    return _drain(agg, "append")
 
 
 @query(
@@ -293,20 +305,16 @@ def t7_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read per-series counts equal the batch counts no matter how the
     file source split microbatches — the sink's exactly-once contract IS
     the graded property."""
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    out = os.path.join(tempfile.gettempdir(), "dws_stream_sink", tag)
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch("t7_stream_sink", sf_dir)
     data, ckpt = os.path.join(out, "data"), os.path.join(out, "ckpt")
     stream = _stream_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    with _few_state_partitions(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", data)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
+    _drain(
+        stream,
+        "append",
+        sink=lambda w: w.format("parquet")
+        .option("path", data)
+        .option("checkpointLocation", ckpt),
+    )
     back = spark.read.parquet(data)
     return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
@@ -366,7 +374,6 @@ def t6_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    name = f"t6_state_{uuid.uuid4().hex[:8]}"
     stream = _stream_events(spark, sf_dir).withColumn(
         # exact integer cents BEFORE the Python surface: int64 state
         # addition is associative, so the result is order- and
@@ -383,17 +390,7 @@ def t6_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    with _few_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    _assert_single_data_batch(q)
-    return spark.table(name)
+    return _drain(out, "update", single_batch=True)
 
 
 @query(
@@ -428,10 +425,8 @@ def t9_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully graded end-to-end: stream → state store → foreachBatch merge →
     parquet → read-back.
     """
-    store = os.path.join(
-        tempfile.gettempdir(), "dws_sinks", sf_dir.rstrip("/").split("/")[-1], "t9_store"
-    )
-    shutil.rmtree(store, ignore_errors=True)
+    out = scratch("t9_stream_upsert", sf_dir)
+    store, ckpt = os.path.join(out, "store"), os.path.join(out, "ckpt")
     agg = (
         _stream_events(spark, sf_dir)
         .groupBy(
@@ -461,18 +456,11 @@ def t9_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = batch
         merged.write.mode("overwrite").parquet(store)
 
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"dws_ckpt_t9_{uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        _await(q)
+    _drain(
+        agg,
+        "update",
+        sink=lambda w: w.foreachBatch(upsert).option("checkpointLocation", ckpt),
+    )
     return spark.read.parquet(store)
 
 
@@ -516,7 +504,6 @@ def t8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator — while state stays O(1 h × active users), sharded by the
     user_id join key, not O(stream history).
     """
-    name = f"t8_ssj_{uuid.uuid4().hex[:8]}"
     clicks = (
         _stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -539,19 +526,9 @@ def t8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
     ).select("user_id", "event_id", "purchase_ts", "click_ts", "click_value")
-    with _few_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    _assert_single_data_batch(q)
     # stable small result: pairs per user (the memory sink holds raw pairs)
     return (
-        spark.table(name)
+        _drain(joined, "append", single_batch=True)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -613,7 +590,6 @@ def t10_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     That merge-and-evict lifecycle is the O(active sessions) state bound
     a 100 TB clickstream needs; it only exists on the streaming path.
     """
-    name = f"t10_sess_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "2 hours")
@@ -621,12 +597,7 @@ def t10_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total"))
         .select("user_id", F.col("w.start").alias("session_start"), "n", "total")
     )
-    with _few_state_partitions(spark):
-        q = agg.writeStream.format("memory").queryName(name).outputMode("append").trigger(
-            availableNow=True
-        ).start()
-        _await(q)
-    return spark.table(name)
+    return _drain(agg, "append")
 
 
 @query(
@@ -665,23 +636,13 @@ def t12_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
-    name = f"t12_ss_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
         .groupBy("segment", F.col("event_type").alias("series"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
     )
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 @query(
@@ -716,23 +677,13 @@ def t13_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon (e.g. 48 h) and state stays O(keys within horizon), not
     O(history) — the property that makes this viable on a 100 TB feed.
     """
-    name = f"t13_dedup_{uuid.uuid4().hex[:8]}"
     keyed = (
         _stream_events(spark, sf_dir)
         .select("user_id", F.date_trunc("hour", "ts").alias("bucket"))
         .withWatermark("bucket", "45 days")
     )
     deduped = keyed.dropDuplicatesWithinWatermark(["user_id", "bucket"])
-    with _few_state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    return spark.table(name)
+    return _drain(deduped, "append")
 
 
 @query(
@@ -809,7 +760,6 @@ def t14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     State at scale: O(1 h × active users) per side, sharded by user_id;
     the outer side adds only the expiry timers — same bound as t8.
     """
-    name = f"t14_soj_{uuid.uuid4().hex[:8]}"
     clicks = (
         _stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -832,17 +782,7 @@ def t14_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES")),
         "leftOuter",
     ).select("user_id", "event_id", "purchase_ts", "click_ts")
-    with _few_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    _assert_single_data_batch(q)
-    raw = spark.table(name)
+    raw = _drain(joined, "append", single_batch=True)
     return raw.groupBy("user_id").agg(
         F.count(F.when(F.col("click_ts").isNotNull(), 1)).alias("n_matched"),
         F.countDistinct(

@@ -11,7 +11,7 @@ import os
 
 import duckdb
 
-from datums_warehouse_spark.sources.tables import TABLES, path
+from datums_warehouse_spark.sources.tables import TABLES, path, scratch
 
 
 def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -23,7 +23,10 @@ def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # of degrading to disk. The cap is the SMALLER of 32 GB and ~70% of
     # physical RAM (ADVICE r09: a flat 32 GB would RAISE the limit above
     # DuckDB's 80%-of-RAM default on sub-40 GB hosts — the opposite of a
-    # bound); the spill dir keeps the Spark JVM heap safe either way.
+    # bound); the spill dir keeps the Spark JVM heap safe either way. Each
+    # connection spills into its own scratch directory, so two open
+    # connections never share spill files; DuckDB creates it (one level
+    # deep) on the first spill and removes it at close.
     try:
         phys_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / 2**30
         if phys_gb <= 0:  # sysconf returning -1/0 means "unknown", not 0 RAM
@@ -33,8 +36,8 @@ def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
         # platform without sysconf (or an unusable answer): keep the 32GB cap
         cap_gb = 32
     con.execute(f"SET memory_limit='{cap_gb}GB'")
-    spill = os.path.join("/tmp", "dws_duck_spill")
-    os.makedirs(spill, exist_ok=True)
+    spill = scratch(f"duck_spill_{id(con)}", sf_dir)
+    os.makedirs(os.path.dirname(spill), exist_ok=True)
     con.execute(f"SET temp_directory='{spill}'")
     for t in TABLES:
         p = path(sf_dir, t)

@@ -176,3 +176,18 @@ def test_analytic_replication_oracle_matches_direct(duck, sf_dir):
         direct_incr,
         stress._expected_frame("l40_incremental_dedup", qs, m, sf_dir, base=base),
     ), "analytic incremental-dedup expectation diverged from the direct oracle"
+
+
+def test_bench_reruns_when_calibration_drifts_past_twice():
+    """bench.py re-runs its timed passes once when the machine's speed
+    moved more than 2× between the start and end calibration (one published
+    run read 0.391 s at the start against 0.164 s at the end)."""
+    import bench
+
+    assert bench.machine_drifted([0.391] * 3, [0.164] * 3)
+    assert bench.machine_drifted([0.164] * 3, [0.391] * 3)  # either way round
+    assert not bench.machine_drifted([0.2] * 3, [0.4] * 3)  # 2× exactly is kept
+    assert not bench.machine_drifted([0.2] * 3, [0.2] * 3)
+    # medians decide, so one stalled sample of three moves nothing
+    assert not bench.machine_drifted([0.2, 0.9, 0.21], [0.22, 0.2, 0.2])
+    assert bench.calibration_drift([0.3, 0.1, 0.2], [0.4]) == 2.0

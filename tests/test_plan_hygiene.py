@@ -121,6 +121,55 @@ def test_global_sorts_only_in_sort_family(plans):
 
 REPO = Path(__file__).resolve().parents[1]
 HARNESSES = [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py"))]
+PACKAGE = REPO / "datums_warehouse_spark"
+
+
+def _function_source(src: str, name: str) -> str:
+    return next(
+        ast.get_source_segment(src, node)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef) and node.name == name
+    )
+
+
+def _matches(label: str, src: str, pattern: str) -> list[str]:
+    return [
+        f"{label}:{src[: m.start()].count(chr(10)) + 1} {m.group(0)}"
+        for m in re.finditer(pattern, src)
+    ]
+
+
+def _package_matches(pattern: str, home: str, helper: str) -> list[str]:
+    """Matches of ``pattern`` in the package's code, outside the function
+    ``helper`` of the module ``home``."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel, src = path.relative_to(PACKAGE).as_posix(), path.read_text()
+        if rel == home and f"def {helper}(" in src:
+            body = _function_source(src, helper)
+            src = src.replace(body, "\n" * body.count("\n"))
+        offenders += _matches(rel, src, pattern)
+    return offenders
+
+
+def test_one_scratch_space():
+    """Every file the package writes for itself (writer queries, the
+    stream landing zone and checkpoints, the DuckDB spill) lives under
+    ``tables.scratch_path``'s root, which is private to the process and
+    removed at exit. No other code names a temp directory."""
+    offenders = _package_matches(
+        r"tempfile|gettempdir|mkdtemp|[\"']/tmp", "sources/tables.py", "scratch_path"
+    )
+    assert not offenders, offenders
+
+
+def test_one_stream_drain():
+    """Every genuine stream runs to the end of its input through
+    ``batch_equiv._drain``, the one ``availableNow`` trigger."""
+    offenders = _package_matches(
+        r"availableNow\s*=\s*True", "streaming/batch_equiv.py", "_drain"
+    )
+    assert not offenders, offenders
 
 
 def test_only_observe_times_queries():
@@ -135,16 +184,8 @@ def test_only_observe_times_queries():
     for path in HARNESSES:
         src = path.read_text()
         if path.name == "bench.py":
-            calib = next(
-                node
-                for node in ast.walk(ast.parse(src))
-                if isinstance(node, ast.FunctionDef) and node.name == "_calib"
-            )
-            calib_src = ast.get_source_segment(src, calib)
+            calib_src = _function_source(src, "_calib")
             assert ".count()" not in calib_src, calib_src
             src = src.replace(calib_src, "\n" * calib_src.count("\n"))
-        offenders += [
-            f"{path.name}:{src[: m.start()].count(chr(10)) + 1} {m.group(0)}"
-            for m in re.finditer(r"perf_counter|release_caches", src)
-        ]
+        offenders += _matches(path.name, src, r"perf_counter|release_caches")
     assert not offenders, offenders

@@ -47,12 +47,12 @@ def test_s11_manifest_gates_visibility(spark, sf_dir):
     the graded result reads manifest-listed parts only, so planting an
     orphan after the run must not change what a manifest-driven reader
     sees."""
-    from datums_warehouse_spark.sources import pysource
+    from datums_warehouse_spark.sources.tables import scratch_path
 
     q = all_queries()["s11_python_datasink"].fn
     before = {tuple(r) for r in q(spark, sf_dir).collect()}
 
-    out_dir = pysource.LAST_SINK_DIR
+    out_dir = scratch_path("s11_python_datasink", sf_dir)
     assert out_dir is not None and os.path.isdir(out_dir)
     manifest = os.path.join(out_dir, "_MANIFEST")
     assert os.path.exists(manifest)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark.sources import sinks
-from datums_warehouse_spark.sources.tables import load
+from datums_warehouse_spark.sources.tables import load, scratch_path
 
 
 def _parquet_parts(path: str) -> list[str]:
@@ -26,11 +26,9 @@ class TestCompaction:
     @pytest.fixture(scope="class")
     def dirs(self, spark, sf_dir):
         sinks.s12_compaction(spark, sf_dir).collect()
-        tag = sf_dir.rstrip("/").split("/")[-1]
-        root = os.path.join(sinks._SINK_ROOT, tag)
         return (
-            os.path.join(root, "s12_fragmented"),
-            os.path.join(root, "s12_compacted"),
+            scratch_path("s12_fragmented", sf_dir),
+            scratch_path("s12_compacted", sf_dir),
         )
 
     def test_file_count_shrinks(self, dirs):
@@ -177,8 +175,7 @@ class TestVacuum:
         listing-based read returns exactly the source row count — the
         double-count an unvacuumed orphan causes is gone."""
         sinks.s13_vacuum(spark, sf_dir).collect()
-        tag = sf_dir.rstrip("/").split("/")[-1]
-        out = os.path.join(sinks._SINK_ROOT, tag, "s13_vacuum")
+        out = scratch_path("s13_vacuum", sf_dir)
         manifest = {
             line.strip()
             for line in open(os.path.join(out, "_MANIFEST"))

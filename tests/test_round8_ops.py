@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from datums_warehouse_spark.functions import udf_surface
 from datums_warehouse_spark.llm import dedup
 from datums_warehouse_spark.sources import sinks
-from datums_warehouse_spark.sources.tables import load
+from datums_warehouse_spark.sources.tables import load, scratch_path
 
 
 class TestSchemaEvolution:
@@ -20,8 +20,7 @@ class TestSchemaEvolution:
         """v1 files must genuinely LACK event_type and v2 files carry it —
         otherwise the query grades a plain read, not a schema merge."""
         sinks.s15_schema_evolution(spark, sf_dir).collect()
-        tag = sf_dir.rstrip("/").split("/")[-1]
-        root = os.path.join(sinks._SINK_ROOT, tag, "s15_schema_evolution")
+        root = scratch_path("s15_schema_evolution", sf_dir)
         for version, has_col in (("v1", False), ("v2", True)):
             parts = [
                 os.path.join(root, version, f)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from datums_warehouse_spark.llm import dedup
 from datums_warehouse_spark.operators import timeseries
 from datums_warehouse_spark.sources import sinks
-from datums_warehouse_spark.sources.tables import events_us
+from datums_warehouse_spark.sources.tables import events_us, scratch_path
 
 
 class TestTwap:
@@ -98,8 +98,7 @@ class TestDynamicOverwrite:
             if day != d0:
                 assert rows[day][0] == base[day][0], day
         # on-disk: one hive directory per day survived the dynamic overwrite
-        tag = sf_dir.rstrip("/").split("/")[-1]
-        root = os.path.join(sinks._SINK_ROOT, tag, "s17_dynamic_overwrite")
+        root = scratch_path("s17_dynamic_overwrite", sf_dir)
         days = {d for d in os.listdir(root) if d.startswith("day=")}
         assert days == {f"day={d}" for d in base}
 
