@@ -527,7 +527,7 @@ def min_label_propagation(
     self-labeled vertex a monotone-decreasing label can settle on is the
     component min. ``max_rounds`` stays as a loud safety cap (now only
     reachable past diameter ~2^rounds)."""
-    from datums_warehouse_spark.session import scoped_shuffle_partitions
+    from datums_warehouse_spark.session import scoped_conf
 
     # Size-aware clamp: each round shuffles the edge table, so partition
     # count should track |edges|, not the session default — 2 partitions
@@ -552,7 +552,7 @@ def min_label_propagation(
         parts = 8
     else:
         parts = spark.sparkContext.defaultParallelism
-    with scoped_shuffle_partitions(spark, parts):
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": str(parts)}):
         labels = None
         for _ in range(max_rounds):
             if labels is None:

@@ -148,6 +148,9 @@ def all_queries() -> dict[str, Query]:
     load_all()
     front = [n for n in _GRADE_FRONT if n in _REGISTRY]
     rest = [n for n in _REGISTRY if n not in _GRADE_FRONT]
+    # _MODULES order, not import order: a module importing another one
+    # (warehouse → timeseries) must not reshuffle the grading window
+    rest.sort(key=lambda n: _MODULES.index(_REGISTRY[n].fn.__module__))
     return {n: _REGISTRY[n] for n in (*front, *rest)}
 
 

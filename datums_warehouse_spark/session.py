@@ -55,34 +55,15 @@ def get_spark(app_name: str = "datums-warehouse-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-class scoped_shuffle_partitions:
-    """Temporarily clamp ``spark.sql.shuffle.partitions``.
-
-    For stages whose data is orders of magnitude smaller than the session's
-    shuffle sizing assumes — iterative loops over tiny label tables, test-
-    scale streaming state stores — where a default session (200 partitions)
-    pays per-partition task/state overhead for kilobytes of data. Restores
-    the previous value on exit; AQE coalescing makes this a no-op for
-    large stages, so it only ever removes overhead.
-    """
-
-    def __init__(self, spark: SparkSession, n: int = 8):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
 class scoped_conf:
-    """Temporarily set arbitrary session confs, restoring priors on exit —
-    the generalized sibling of scoped_shuffle_partitions for operators that
-    need a write-time knob (e.g. s12's stats-bearing timestamp encoding)
-    without leaking it into the caller's session."""
+    """Temporarily set session confs, restoring priors on exit — for a
+    write-time knob (s12's stats-bearing timestamp encoding) or a
+    ``spark.sql.shuffle.partitions`` clamp on stages orders of magnitude
+    smaller than the session's sizing assumes (label-propagation rounds,
+    test-scale stream state stores), without leaking either into the
+    caller's session. AQE coalescing makes a clamp a no-op for large
+    stages. Keys name the conf, so pass them as ``**{"spark.sql...": v}``.
+    """
 
     def __init__(self, spark: SparkSession, **confs: str):
         self.spark, self.confs = spark, confs

@@ -243,7 +243,7 @@ def t11_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-    from datums_warehouse_spark.session import scoped_shuffle_partitions
+    from datums_warehouse_spark.session import scoped_conf
 
     path = os.path.join(sf_dir, "events.parquet")
     CHUNK = 50_000  # rows per micro-batch
@@ -331,7 +331,7 @@ def t11_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(25,6)")).cast("double").alias("total_value"),
     )
     name = f"t11_pysrc_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark):
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

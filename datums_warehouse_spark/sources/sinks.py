@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark.functions.determinism import dsum, sql_dsum
-from datums_warehouse_spark.operators.candles import candles
+from datums_warehouse_spark.operators.candles import SQL_HOUR, candles, candles_oracle
 from datums_warehouse_spark.registry import query
 from datums_warehouse_spark.sources.tables import events_us, load, scratch
 
@@ -78,25 +78,10 @@ def s4_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "s6_merge_upsert",
     oracle=f"""
-        WITH candle_all AS (
-            SELECT event_type AS series,
-                   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                   arg_min(value, ts) AS open, max(value) AS high,
-                   min(value) AS low, arg_max(value, ts) AS close,
-                   {sql_dsum("value")} AS volume, count(*) AS n
-            FROM events GROUP BY 1, 2
-        ),
-        stored AS (
-            SELECT event_type AS series,
-                   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                   arg_min(value, ts) AS open, max(value) AS high,
-                   min(value) AS low, arg_max(value, ts) AS close,
-                   {sql_dsum("value")} AS volume, count(*) AS n
-            FROM events WHERE event_id % 10 != 0 GROUP BY 1, 2
-        ),
+        WITH candle_all AS ({candles_oracle(SQL_HOUR)}),
+        stored AS ({candles_oracle(SQL_HOUR, "event_id % 10 != 0")}),
         touched AS (
-            SELECT DISTINCT event_type AS series,
-                   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket
+            SELECT DISTINCT event_type AS series, {SQL_HOUR} AS bucket
             FROM events WHERE event_id % 10 = 0
         )
         SELECT c.* FROM candle_all c JOIN touched t
@@ -121,16 +106,18 @@ def s6_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key set — the stored table is never shuffled. With a partitioned lake
     this is dynamic-partition-overwrite: rewrite only the touched
     partitions, leave the rest of the 100 TB untouched (see
-    ``Warehouse.merge``, the write-path twin of this query).
+    ``Warehouse.merge``, the write-path twin of this query). Unlike
+    ``warehouse.upsert`` (merge's and t9's), the anti join keys on
+    ``touched``, not on the revised bars' own keys.
     """
     e = events_us(spark, sf_dir)
     late = F.col("event_id") % 10 == 0
-    stored = candles(e.filter(~late), "hour")
+    hour = F.date_trunc("hour", "ts")
+    stored = candles(e.filter(~late), hour)
     touched = e.filter(late).select(
-        F.col("event_type").alias("series"),
-        F.date_trunc("hour", "ts").alias("bucket"),
+        F.col("event_type").alias("series"), hour.alias("bucket")
     ).distinct()
-    revised = candles(e, "hour").join(
+    revised = candles(e, hour).join(
         F.broadcast(touched), ["series", "bucket"], "left_semi"
     )
     kept = stored.join(F.broadcast(touched), ["series", "bucket"], "left_anti")
@@ -232,14 +219,7 @@ def s7_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s8_incremental_pipeline",
-    oracle=f"""
-        SELECT event_type AS series,
-               date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-               arg_min(value, ts) AS open, max(value) AS high,
-               min(value) AS low, arg_max(value, ts) AS close,
-               {sql_dsum("value")} AS volume, count(*) AS n
-        FROM events GROUP BY 1, 2
-    """,
+    oracle=candles_oracle(SQL_HOUR),
     tags=("S5", "S6", "scale", "eager"),
 )
 def s8_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,7 +247,8 @@ def s8_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from 2024-01-01 at every SF, so the boundary splits it at any scale)
     wh.ingest(feed.filter(F.col("ts") < F.lit("2024-04-01").cast("timestamp")))
     wh.update_incremental(feed)  # full feed: only unseen rows append
-    return candles(wh.table().withColumnRenamed("series", "event_type"), "hour")
+    stored = wh.table().withColumnRenamed("series", "event_type")
+    return candles(stored, F.date_trunc("hour", "ts"))
 
 
 RETENTION_DAYS = 14  # keep the trailing N days, relative to the newest event
@@ -660,10 +641,10 @@ def s17_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     The restated day is selected with a 1-row min aggregate attached
     broadcast-side (no driver collect). At 100 TB this is the nightly
     correction pattern: the rewrite cost is O(restated partitions), the
-    reader-visible switch is the atomic directory swap.
+    reader-visible switch is the atomic directory swap. The mode is an
+    option of the write, not a session conf: toggling the shared session
+    value would race with any other writer on the session.
     """
-    from datums_warehouse_spark.session import scoped_conf
-
     out = scratch("s17_dynamic_overwrite", sf_dir)
     e = events_us(spark, sf_dir).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "value"
@@ -675,10 +656,12 @@ def s17_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("d0")
         .withColumn("value", F.col("value") * 2)
     )
-    with scoped_conf(
-        spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        restated.write.mode("overwrite").partitionBy("day").parquet(out)
+    (
+        restated.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(out)
+    )
     back = spark.read.parquet(out).withColumn("day", F.col("day").cast("string"))
     return back.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value")

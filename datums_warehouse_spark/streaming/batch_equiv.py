@@ -39,8 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from datums_warehouse_spark.functions.determinism import DEC, dsum, sql_dsum
+from datums_warehouse_spark.operators.candles import SQL_HOUR, candles, candles_oracle
 from datums_warehouse_spark.registry import query
-from datums_warehouse_spark.session import scoped_shuffle_partitions
+from datums_warehouse_spark.session import scoped_conf
 from datums_warehouse_spark.sources.tables import (
     events_us,
     load,
@@ -48,6 +49,7 @@ from datums_warehouse_spark.sources.tables import (
     scratch,
     scratch_path,
 )
+from datums_warehouse_spark.warehouse import upsert
 
 
 @query(
@@ -210,7 +212,7 @@ def _drain(
     name = f"drain_{uuid.uuid4().hex[:12]}"
     writer = stream.writeStream.outputMode(mode)
     writer = sink(writer) if sink else writer.format("memory").queryName(name)
-    with scoped_shuffle_partitions(stream.sparkSession):
+    with scoped_conf(stream.sparkSession, **{"spark.sql.shuffle.partitions": "8"}):
         q = writer.trigger(availableNow=True).start()
         if not q.awaitTermination(120):
             q.stop()
@@ -395,26 +397,20 @@ def t6_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t9_stream_upsert",
-    oracle=f"""
-        SELECT
-          event_type AS series,
-          date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-          arg_min(value, ts) AS open, max(value) AS high,
-          min(value) AS low, arg_max(value, ts) AS close,
-          {sql_dsum("value")} AS volume, count(*) AS n
-        FROM events
-        GROUP BY 1, 2
-    """,
+    oracle=candles_oracle(SQL_HOUR),
     tags=("T9", "stream", "eager"),
 )
 def t9_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming candle maintenance: an update-mode streaming aggregation
     whose microbatches are upserted into a parquet candle store via
     ``foreachBatch`` — the production pattern for keeping a warehouse
-    current from a feed (and the genuine-stream twin of ``s6_merge_upsert``).
+    current from a feed (and the genuine-stream twin of ``s6_merge_upsert``:
+    the same :func:`~datums_warehouse_spark.operators.candles.candles`
+    aggregate as T1, bucketed by the hourly window's start, and the same
+    ``warehouse.upsert`` as ``Warehouse.merge``).
 
     Update mode emits only the (series, hour) bars each microbatch touched;
-    the merge replaces exactly those keys in the store (union ∪ anti-join,
+    the upsert replaces exactly those keys in the store (union ∪ anti-join,
     dynamic-overwrite shape). Because the upsert is idempotent per key, the
     final store equals the batch candles — so a real ``readStream`` run is
     fully ORACLE-GRADED, not rows-only: restarts/retries converge to the
@@ -427,39 +423,18 @@ def t9_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     out = scratch("t9_stream_upsert", sf_dir)
     store, ckpt = os.path.join(out, "store"), os.path.join(out, "ckpt")
-    agg = (
-        _stream_events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("series"),
-            F.window("ts", "1 hour").alias("w"),
-        )
-        .agg(
-            F.min_by("value", "ts").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", "ts").alias("close"),
-            dsum("value").alias("volume"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select("series", F.col("w.start").alias("bucket"), "open", "high", "low", "close", "volume", "n")
-    )
+    agg = candles(_stream_events(spark, sf_dir), F.window("ts", "1 hour").start)
 
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
+    def revise(batch: DataFrame, batch_id: int) -> None:
         if os.path.exists(store):
-            stored = sp.read.parquet(store)
-            kept = stored.join(
-                batch.select("series", "bucket"), ["series", "bucket"], "left_anti"
-            )
-            merged = batch.unionByName(kept).localCheckpoint(eager=True)
-        else:
-            merged = batch
-        merged.write.mode("overwrite").parquet(store)
+            stored = batch.sparkSession.read.parquet(store)
+            batch = upsert(stored, batch, ["series", "bucket"])
+        batch.write.mode("overwrite").parquet(store)
 
     _drain(
         agg,
         "update",
-        sink=lambda w: w.foreachBatch(upsert).option("checkpointLocation", ckpt),
+        sink=lambda w: w.foreachBatch(revise).option("checkpointLocation", ckpt),
     )
     return spark.read.parquet(store)
 

@@ -21,8 +21,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark.operators.candles import candles as _candles
+from datums_warehouse_spark.operators.timeseries import fill_linear, gaps as _gaps
 
 SCHEMA = "event_id long, ts timestamp, series string, value double"
+
+
+def upsert(stored: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
+    """``updates`` ∪ (``stored`` ⟕̸ the updates' ``keys``): an update
+    replaces the stored row with its key, other stored rows survive — the
+    reference's re-fetch-and-revise step [R], shared by ``Warehouse.merge``
+    and ``t9_stream_upsert``'s foreachBatch sink.
+
+    The result is localCheckpoint-ed eagerly: both callers overwrite the
+    path ``stored`` is read from, which a lazy plan would still be reading.
+    """
+    kept = stored.join(updates.select(*keys), keys, "left_anti")
+    return updates.unionByName(kept).localCheckpoint(eager=True)
 
 
 class Warehouse:
@@ -80,14 +94,11 @@ class Warehouse:
         Only partitions (series) present in ``updates`` are rewritten —
         dynamic partition overwrite leaves the rest of the lake untouched,
         which is what makes the revise loop O(recent data), not O(warehouse).
-        The merged frame is localCheckpoint-ed first: the overwrite would
-        otherwise read from the path it's replacing.
         """
         up = updates.select("event_id", "ts", "series", "value")
         touched = up.select("series").distinct()
         stored = self.table().join(F.broadcast(touched), "series", "left_semi")
-        kept = stored.join(up.select("series", "ts"), ["series", "ts"], "left_anti")
-        merged = up.unionByName(kept).localCheckpoint(eager=True)
+        merged = upsert(stored, up, ["series", "ts"])
         # per-write option, not the session conf: toggling the shared
         # session value races with any other writer on the same session
         (
@@ -183,9 +194,10 @@ class Warehouse:
     # -- analytics ------------------------------------------------------------
 
     def candles(self, name: str, grain: str = "hour") -> DataFrame:
-        """OHLCV bars for one series at ``grain`` (A8)."""
+        """OHLCV bars for one series at ``grain``, a ``date_trunc`` unit (A8)."""
         return _candles(
-            self.series(name).withColumnRenamed("series", "event_type"), grain
+            self.series(name).withColumnRenamed("series", "event_type"),
+            F.date_trunc(grain, "ts"),
         )
 
     def validate(self, name: str) -> DataFrame:
@@ -200,24 +212,16 @@ class Warehouse:
         )
 
     def interpolate(self, name: str, grain: str = "hour") -> DataFrame:
-        """Dense, gap-free close series for ``name``: missing buckets are
-        linearly interpolated between their nearest present neighbors
-        (edges take the nearest value) — the reference's validate-and-fill
-        read path [R], sharing the exact windowed construction the graded
-        X3 query uses."""
-        from datums_warehouse_spark.operators.timeseries import fill_linear
-
-        hourly = self.candles(name, grain).select("series", "bucket", "close")
-        return fill_linear(hourly)
+        """Dense, gap-free close series for ``name``: one row per ``grain``
+        bucket between its first and last candle, missing buckets linearly
+        interpolated between their nearest present neighbors (edges take
+        the nearest value) — the reference's validate-and-fill read path
+        [R], the windowed construction of the graded X3 query at any
+        ``date_trunc`` grain."""
+        closes = self.candles(name, grain).select("series", "bucket", "close")
+        return fill_linear(closes, grain)
 
     def gaps(self, name: str, grain: str = "hour") -> DataFrame:
-        """Missing buckets in the series' dense grid (X2)."""
-        hourly = self.candles(name, grain).select("series", "bucket")
-        bounds = hourly.groupBy("series").agg(
-            F.min("bucket").alias("h0"), F.max("bucket").alias("h1")
-        )
-        step = {"hour": "INTERVAL 1 HOUR", "day": "INTERVAL 1 DAY"}[grain]
-        grid = bounds.select(
-            "series", F.explode(F.sequence("h0", "h1", F.expr(step))).alias("bucket")
-        )
-        return grid.join(hourly, ["series", "bucket"], "left_anti")
+        """Missing ``grain`` buckets in the series' dense grid — the graded
+        X2 query's construction at any ``date_trunc`` grain."""
+        return _gaps(self.candles(name, grain).select("series", "bucket"), grain)

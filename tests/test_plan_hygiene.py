@@ -189,3 +189,19 @@ def test_only_observe_times_queries():
             src = src.replace(calib_src, "\n" * calib_src.count("\n"))
         offenders += _matches(path.name, src, r"perf_counter|release_caches")
     assert not offenders, offenders
+
+
+def test_one_candle():
+    """The six OHLCV aggregates are written once, in ``candles.candles``,
+    and their DuckDB twin once, in ``candles.candles_oracle``: every candle
+    in the package (A8, T1, X1, s6, s8, T9 and the Warehouse facade)
+    passes its bucket to those two."""
+    for pattern in (r'min_by\("value", "ts"\)', r"arg_min\(value, ts\) AS open"):
+        hits = [
+            hit
+            for path in sorted(PACKAGE.rglob("*.py"))
+            for hit in _matches(
+                path.relative_to(PACKAGE).as_posix(), path.read_text(), pattern
+            )
+        ]
+        assert len(hits) == 1 and hits[0].startswith("operators/candles.py:"), hits

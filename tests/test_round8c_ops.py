@@ -1,6 +1,6 @@
 """Physical-layout and algebraic contracts for the late-round-8 additions
 that the oracle hash can't see: x11's dwell-time tiling, s16's interval
-algebra, s17's on-disk partition layout, d9's Arrow plan + pushdown, l39's
+algebra, s17's on-disk partition layout and per-write overwrite mode, d9's Arrow plan + pushdown, l39's
 band accounting, and l40's side discipline."""
 
 from __future__ import annotations
@@ -9,10 +9,12 @@ import os
 
 from pyspark.sql import functions as F
 
+from datums_warehouse_spark import all_queries
 from datums_warehouse_spark.llm import dedup
 from datums_warehouse_spark.operators import timeseries
 from datums_warehouse_spark.sources import sinks
 from datums_warehouse_spark.sources.tables import events_us, scratch_path
+from datums_warehouse_spark.testing.compare import compare_frames
 
 
 class TestTwap:
@@ -101,6 +103,23 @@ class TestDynamicOverwrite:
         root = scratch_path("s17_dynamic_overwrite", sf_dir)
         days = {d for d in os.listdir(root) if d.startswith("day=")}
         assert days == {f"day={d}" for d in base}
+
+    def test_leaves_the_session_conf_alone(self, spark, sf_dir, duck, monkeypatch):
+        """The restatement asks for dynamic partition overwrite on its own
+        write, not by toggling the shared session value (which races with
+        other writers on the session): with ``spark.conf.set`` raising, s17
+        still matches its oracle."""
+
+        def refuse(*_a, **_k):
+            raise AssertionError("s17 must not set session conf")
+
+        monkeypatch.setattr(spark.conf, "set", refuse)
+        out = sinks.s17_dynamic_overwrite(spark, sf_dir)
+        monkeypatch.undo()
+
+        oracle = duck.execute(all_queries()["s17_dynamic_overwrite"].oracle).fetchdf()
+        res = compare_frames("s17_dynamic_overwrite", out.toPandas(), oracle)
+        assert res, res.detail
 
 
 class TestIterPandasUdf:

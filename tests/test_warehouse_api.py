@@ -11,6 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from datums_warehouse_spark.operators.timeseries import x2_gap_detection
 from datums_warehouse_spark.sources.tables import events_us
 from datums_warehouse_spark.warehouse import Warehouse
 
@@ -21,6 +22,12 @@ def wh(spark, sf_dir):
     w = Warehouse(spark, root)
     yield w, root
     shutil.rmtree(root, ignore_errors=True)
+
+
+def _epoch_s(df):
+    """``bucket`` as epoch seconds, read in Spark so the host's time zone
+    cannot shift it."""
+    return [r[0] for r in df.select(F.unix_timestamp("bucket")).collect()]
 
 
 def _feed(spark, sf_dir):
@@ -74,7 +81,8 @@ def test_candles_match_operator(spark, sf_dir, wh):
 
     via_wh = w.candles("purchase", "hour")
     direct = candles(
-        events_us(spark, sf_dir).filter(F.col("event_type") == "purchase"), "hour"
+        events_us(spark, sf_dir).filter(F.col("event_type") == "purchase"),
+        F.date_trunc("hour", "ts"),
     )
     a = sorted(map(str, via_wh.collect()))
     b = sorted(map(str, direct.collect()))
@@ -86,8 +94,18 @@ def test_validate_and_gaps(spark, sf_dir, wh):
     w.ingest(_feed(spark, sf_dir))
     v = w.validate("error").collect()[0]
     assert v.n > 0 and v.n_dup_ts == 0
-    g = w.gaps("error", "hour")
-    assert g.count() >= 0  # dense grid minus present buckets materializes
+    # hour grain: exactly the graded X2 rows of the series
+    got = sorted(map(tuple, w.gaps("error", "hour").collect()))
+    x2 = x2_gap_detection(spark, sf_dir).filter(F.col("series") == "error")
+    assert got == sorted(map(tuple, x2.collect()))
+    # day grain: midnight buckets (UTC session) that no daily candle has,
+    # which together with the candles' buckets tile the span day by day
+    days = set(_epoch_s(w.candles("error", "day")))
+    missing = _epoch_s(w.gaps("error", "day"))
+    assert all(b % 86400 == 0 for b in missing)
+    assert not days & set(missing)
+    grid = sorted(days | set(missing))
+    assert {b - a for a, b in zip(grid, grid[1:])} == {86400}
 
 
 def test_compact_preserves_data_and_reduces_files(spark, sf_dir, wh):
@@ -176,6 +194,21 @@ def test_interpolate_fills_gaps_densely(spark, sf_dir, wh):
     lo = min(v for v in candles.values())
     hi = max(v for v in candles.values())
     assert all(lo <= r.close_interp <= hi for r in filled if r.filled)
+
+
+def test_interpolate_at_day_grain_is_a_daily_grid(spark, sf_dir, wh):
+    """interpolate(name, "day") has one row per daily grid bucket: every
+    bucket is a midnight, consecutive buckets are a day apart, and the rows
+    are the daily candles plus the daily gaps."""
+    w, _ = wh
+    w.ingest(_feed(spark, sf_dir))
+    filled = w.interpolate("click", "day")
+    buckets = sorted(_epoch_s(filled))
+    assert all(b % 86400 == 0 for b in buckets)
+    assert {b - a for a, b in zip(buckets, buckets[1:])} == {86400}
+    n_days = w.candles("click", "day").count()
+    assert len(buckets) == n_days + w.gaps("click", "day").count()
+    assert filled.filter(~F.col("filled")).count() == n_days
 
 
 def test_merge_is_idempotent(spark, sf_dir, wh):
